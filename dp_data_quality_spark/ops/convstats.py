@@ -157,57 +157,6 @@ def turn_coherence(df: DataFrame,
     )
 
 
-def rollup_keep_by_conversation(
-    df: DataFrame,
-    min_keep_frac: float,
-    conv_col: str = "conv_id",
-    keep_col: str = "keep",
-    reasons_col: str | None = "drop_reasons",
-    bucket_col: str | None = None,
-    reason: str = "conv_low_keep_frac",
-) -> DataFrame:
-    """Demote every turn of a conversation whose kept-turn fraction is
-    below ``min_keep_frac`` (SFT practice: a dialogue with holes can't
-    be replayed for training, so a conversation that is mostly filtered
-    out should be dropped whole, not shipped as fragments).
-
-    Rewrites ``keep_col`` (and appends ``reason`` to ``reasons_col`` on
-    the turns being demoted — already-dropped turns keep their original
-    reasons).  The fraction is computed over all turns of the
-    conversation present in ``df``.
-
-    Scale: the rollup is a window aggregate, and when ``bucket_col`` is
-    given (the pipeline's salted-hash bucket, a pure function of the
-    conversation id) the window partitions by ``(bucket, conv_id)`` —
-    Spark's ``HashPartitioning(bucket)`` satisfies the clustered
-    distribution of a superset key (the subset rule), so a DataFrame
-    already repartitioned by bucket needs NO further Exchange: the
-    conversation-level decision rides the existing partitioning with
-    one in-partition sort (plan-asserted in tests).  Caveat the
-    pipeline hit: a scalar-pandas-UDF stage does NOT propagate output
-    partitioning, so partition-then-score-then-rollup still pays one
-    re-Exchange — repartition after the Python stage, not before it,
-    when composing with UDF scoring.  Without ``bucket_col`` it falls
-    back to a plain conv-keyed window (one shuffle).
-    """
-    keys = [bucket_col, conv_col] if bucket_col else [conv_col]
-    w = Window.partitionBy(*keys)
-    frac = F.avg(F.col(keep_col).cast("int")).over(w)
-    demote = F.col(keep_col) & (frac < F.lit(min_keep_frac))
-    out = df
-    if reasons_col is not None:
-        out = out.withColumn(
-            reasons_col,
-            F.when(
-                demote,
-                F.concat(F.col(reasons_col), F.array(F.lit(reason))),
-            ).otherwise(F.col(reasons_col)),
-        )
-    return out.withColumn(
-        keep_col, F.col(keep_col) & (frac >= F.lit(min_keep_frac))
-    )
-
-
 def dedup_conversations(
     df: DataFrame,
     conv_col: str = "conv_id",

@@ -473,8 +473,10 @@ def duplicated_spans(
     k: int = 8,
     min_count: int = 2,
 ) -> DataFrame:
-    """Maximal spans of ≥ ``k`` consecutive words whose every length-k
-    window occurs ≥ ``min_count`` times in the corpus — the exact
+    """Maximal runs of ≥ ``k`` consecutive words each covered by some
+    length-k window that occurs ≥ ``min_count`` times in the corpus
+    (windows whose starts are ≤ k apart merge into one span, so an
+    interior window of a span need not itself be duplicated) — the exact
     substring-level dedup signal (the published recipe trains a suffix
     array; at cluster scale the equivalent is hashed fixed-k windows,
     which find the identical spans for any duplicated run ≥ k words).

@@ -30,7 +30,8 @@ import hashlib
 from dataclasses import dataclass
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -54,6 +55,16 @@ METRICS_SCHEMA = T.StructType([
 NULL_REASON = "null_text"
 LANG_REASON = "lang_mismatch"
 PPL_REASON = "high_perplexity"
+ROLLUP_REASON = "conv_low_keep_frac"
+
+# Sink layout shared by the batch (run_pipeline) and stream
+# (streaming.stream_filter.filtered_writer) writers.  keep is stored as
+# int so the partition column's type survives a re-read.
+OUTPUT_COLUMNS = [
+    "CAST(keep AS INT) AS keep",
+    "bucket", "conv_id", "turn_idx", "role", "tool", "ts",
+    "lang", "lang_conf", "ppl", "scrubbed_text", "drop_reasons",
+]
 
 
 def score_turns(
@@ -132,15 +143,54 @@ class PipelineResult:
 
 
 def read_completed_buckets(spark: SparkSession, metrics_path: str) -> DataFrame | None:
+    """Buckets a previous run committed, or ``None`` on a fresh start.
+
+    Only a missing metrics directory counts as a fresh start.  Any other
+    read error propagates: treating it as "nothing completed" would
+    reprocess every bucket and append their metrics rows a second time.
+    The explicit schema makes a directory with no committed part files
+    (a crash during the metrics write leaves only ``_temporary/``) read
+    as empty instead of failing schema inference."""
     try:
-        m = spark.read.parquet(metrics_path)
-    except Exception:
-        return None
+        m = spark.read.schema(METRICS_SCHEMA).parquet(metrics_path)
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return None
+        raise
     return (
         m.filter(F.col("status") == "completed")
         .select(F.col("partition_key").cast("int").alias("bucket"))
         .distinct()
     )
+
+
+def rollup_keep_by_conversation(df: DataFrame, min_keep_frac: float) -> DataFrame:
+    """Demote every turn of a conversation whose kept-turn fraction is
+    below ``min_keep_frac`` (SFT practice: a dialogue with holes can't
+    be replayed for training, so a conversation that is mostly filtered
+    out should be dropped whole, not shipped as fragments).
+
+    Rewrites ``keep`` and appends ``conv_low_keep_frac`` to
+    ``drop_reasons`` on the turns being demoted (already-dropped turns
+    keep their original reasons).  The fraction is computed over all
+    turns of the conversation present in ``df``.
+
+    The window partitions by ``(bucket, conv_id)``: bucket is a pure
+    function of conv_id, so Spark's ``HashPartitioning(bucket)``
+    satisfies the window's clustered distribution (the subset rule) and
+    a DataFrame already repartitioned by bucket needs NO further
+    Exchange, only an in-partition sort (plan-asserted in tests).
+    """
+    w = Window.partitionBy("bucket", "conv_id")
+    frac = F.avg(F.col("keep").cast("int")).over(w)
+    demote = F.col("keep") & (frac < F.lit(min_keep_frac))
+    return df.withColumn(
+        "drop_reasons",
+        F.when(
+            demote,
+            F.concat(F.col("drop_reasons"), F.array(F.lit(ROLLUP_REASON))),
+        ).otherwise(F.col("drop_reasons")),
+    ).withColumn("keep", F.col("keep") & (frac >= F.lit(min_keep_frac)))
 
 
 def run_pipeline(
@@ -199,7 +249,9 @@ def run_pipeline(
     # no longer depends on input file layout (a compact parquet would
     # otherwise serialize the pandas-UDF stage onto 1-2 scan partitions);
     # (b) data arrives at the sink already partitioned by bucket, so the
-    # write needs no second shuffle.
+    # write needs no second shuffle.  AQE never coalesces a repartition
+    # with an explicit partition count, so the scoring stage keeps
+    # n_buckets tasks with partition coalescing on (asserted in tests).
     df = df.repartition(n_buckets, "bucket")
 
     scored = score_turns(df, spark, cfg, ppl_table=ppl_table)
@@ -219,40 +271,22 @@ def run_pipeline(
         # (plan-asserted in tests).  scrubbed_text is re-nulled for
         # demoted turns so the keep=0 lineage subtree stays
         # payload-free.
-        from dp_data_quality_spark.ops.convstats import rollup_keep_by_conversation
-
         scored = rollup_keep_by_conversation(
-            scored.repartition(n_buckets, "bucket"),
-            cfg.conv_min_keep_frac,
-            bucket_col="bucket",
+            scored.repartition(n_buckets, "bucket"), cfg.conv_min_keep_frac
         ).withColumn(
             "scrubbed_text", F.when(F.col("keep"), F.col("scrubbed_text"))
         )
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    # AQE partition coalescing can fold the 64-bucket shuffle into a
-    # handful of post-shuffle partitions at small scale, serializing the
-    # pandas-UDF scoring stage (observed 2-3× wall-time regressions on
-    # local[32]).  The bucket count IS the intended parallelism unit here;
-    # at 100 TB each bucket far exceeds the advisory size and coalescing
-    # would be a no-op anyway — disable it for this job.
-    old_coalesce = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    out_cols = [
-        F.col("keep").cast("int").alias("keep"),  # int: partition-col type survives re-read
-        "bucket", "conv_id", "turn_idx", "role", "tool", "ts",
-        "lang", "lang_conf", "ppl", "scrubbed_text", "drop_reasons",
-    ]
-    try:
-        (
-            scored.select(*out_cols)
-            .sortWithinPartitions("conv_id", "turn_idx")
-            .write.partitionBy("keep", "bucket")
-            .mode("overwrite")
-            .parquet(scored_path)
-        )
-    finally:
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", old_coalesce)
+    # dynamic overwrite replaces only the (keep, bucket) partitions this
+    # run writes, so rewriting a bucket after a crash is idempotent.
+    (
+        scored.selectExpr(*OUTPUT_COLUMNS)
+        .sortWithinPartitions("conv_id", "turn_idx")
+        .write.partitionBy("keep", "bucket")
+        .option("partitionOverwriteMode", "dynamic")
+        .mode("overwrite")
+        .parquet(scored_path)
+    )
 
     # lineage metrics from the committed output: pruned columnar scan of
     # (keep, bucket, drop_reasons) only — the text columns are never read.

@@ -7,11 +7,17 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from dp_data_quality_spark import synth
 from dp_data_quality_spark.config import FilterConfig
-from dp_data_quality_spark.pipeline import run_pipeline, score_turns, with_bucket
+from dp_data_quality_spark.pipeline import (
+    rollup_keep_by_conversation,
+    run_pipeline,
+    score_turns,
+    with_bucket,
+)
 
 from .oracle_util import decide_oracle, f1
 
@@ -197,6 +203,65 @@ def test_empty_input_returns_clean_result(spark, transcripts, tmp_path):
     assert res.buckets_skipped == 0
 
 
+def test_run_pipeline_leaves_session_conf_unchanged(spark, transcripts, tmp_path):
+    """run_pipeline passes its write options per write, so the session
+    conf after a run is the one before it.  With AQE partition coalescing
+    on, the scoring stage still runs one task per bucket: AQE never
+    coalesces a repartition with an explicit partition count."""
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    assert spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled") == "true"
+    n_buckets = 16  # above the 4 input partitions and 4 shuffle partitions
+    sc = spark.sparkContext
+    before = {r.key: r.value for r in spark.sql("SET").collect()}
+    sc.setJobGroup("conf-check", "run_pipeline session conf check")
+    try:
+        run_pipeline(spark, transcripts, str(tmp_path / "out"), cfg=CFG,
+                     n_buckets=n_buckets, run_id="c")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    after = {r.key: r.value for r in spark.sql("SET").collect()}
+    assert after == before
+
+    st = sc.statusTracker()
+    # once a session has run more than spark.ui.retainedStages stages, the
+    # status store evicts skipped stages first, so a job's skipped stage
+    # ids can have no StageInfo; skipped stages ran no tasks
+    infos = [
+        st.getStageInfo(sid)
+        for jid in st.getJobIdsForGroup("conf-check")
+        for sid in st.getJobInfo(jid).stageIds
+    ]
+    tasks = [i.numTasks for i in infos if i is not None]
+    # every other stage (input scan, metrics scan and aggregates) has at
+    # most 4 tasks here, so the widest stage is the scoring stage
+    assert max(tasks) == n_buckets, tasks
+
+
+def test_resume_after_crash_in_metrics_write_starts_fresh(spark, transcripts, tmp_path):
+    """A crash during the first metrics write leaves only ``_temporary/``
+    in the metrics directory: no bucket completed, so the rerun starts
+    fresh and skips nothing."""
+    out = tmp_path / "out"
+    (out / "metrics" / "_temporary" / "0").mkdir(parents=True)
+    res = run_pipeline(spark, transcripts, str(out), cfg=CFG, n_buckets=4, run_id="r1")
+    assert res.buckets_skipped == 0
+    assert res.buckets_processed == 4
+    metrics = spark.read.parquet(res.metrics_path)
+    assert metrics.agg(F.sum("rows_in")).first()[0] == transcripts.count()
+
+
+def test_unreadable_metrics_raise_instead_of_restarting(spark, transcripts, tmp_path):
+    """Only a missing metrics directory means a fresh start.  Any other
+    read error propagates: treating it as "nothing completed" would
+    reprocess every bucket and append their metrics rows a second time."""
+    out = tmp_path / "out"
+    (out / "metrics").mkdir(parents=True)
+    (out / "metrics" / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Py4JJavaError, match="not a Parquet file"):
+        run_pipeline(spark, transcripts, str(out), cfg=CFG, n_buckets=4, run_id="r1")
+    assert not (out / "scored").exists()
+
+
 def test_transcripts_pipeline_pinned(spark):
     # the driver oracle for transcripts_pipeline is a pinned VALUES table
     # (the seeded synthetic input makes the output a constant); recompute
@@ -251,13 +316,11 @@ def test_conversation_rollup_window_rides_bucket_partitioning(spark, transcripts
     # subset rule: a window over (bucket, conv_id) on a DataFrame
     # repartitioned by bucket alone must add NO Exchange (bucket is a
     # pure function of conv_id)
-    from dp_data_quality_spark.ops.convstats import rollup_keep_by_conversation
-
     df = (with_bucket(transcripts, 8)
           .withColumn("keep", F.length("text") > 5)
           .withColumn("drop_reasons", F.array().cast("array<string>"))
           .repartition(8, "bucket"))
-    rolled = rollup_keep_by_conversation(df, 0.6, bucket_col="bucket")
+    rolled = rollup_keep_by_conversation(df, 0.6)
     plan = rolled._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1, plan  # only the repartition itself
 
@@ -266,14 +329,11 @@ def test_conversation_rollup_costs_exactly_one_extra_exchange(spark, transcripts
     # through the full scoring stage: the scalar-pandas-UDF projection
     # does not propagate partitioning, so the rollup re-establishes the
     # bucket partitioning once — and the window adds nothing on top
-    from dp_data_quality_spark.ops.convstats import rollup_keep_by_conversation
-
     def plan_for(rollup: bool):
         df = with_bucket(transcripts, 8).repartition(8, "bucket")
         scored = score_turns(df, spark, CFG)
         if rollup:
-            scored = rollup_keep_by_conversation(
-                scored.repartition(8, "bucket"), 0.6, bucket_col="bucket")
+            scored = rollup_keep_by_conversation(scored.repartition(8, "bucket"), 0.6)
         return scored._jdf.queryExecution().executedPlan().toString()
 
     assert plan_for(True).count("Exchange") == plan_for(False).count("Exchange") + 1

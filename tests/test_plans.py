@@ -1,48 +1,9 @@
 """Plan-shape regression tests: the physical plans ARE part of the
 contract at 100 TB — a silent optimizer or refactor regression that turns
-a broadcast join into a shuffle join, un-pushes a filter, or doubles the
-scans would pass every value test and still be a production incident.
-These tests pin the load-bearing plan properties of the headline queries
-(docs/PLANS.md shows the full dumps)."""
+a partitioned window into a single-task global one would pass every value
+test and still be a production incident (docs/PLANS.md shows the dumps)."""
 
 from __future__ import annotations
-
-import __spark_entry__ as E
-
-SF = "/root/testdata/sf0.001"
-
-
-def _plan(spark, name: str) -> str:
-    # q_<name> first: the registry consolidates families into tagged
-    # panels, but plan shapes are pinned per OPERATOR
-    fn = getattr(E, f"q_{name}", None) or E.queries()[name]
-    df = fn(spark, SF)
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_star_join_broadcasts_all_dims(spark):
-    plan = _plan(spark, "top_revenue_nations")
-    # lineitem joins orders/customer/nation/region: every dim side must
-    # broadcast — a SortMergeJoin here means a full shuffle of lineitem
-    assert plan.count("BroadcastHashJoin") >= 3, plan
-    assert "CartesianProduct" not in plan
-
-
-def test_pricing_summary_pushes_filter_and_prunes(spark):
-    plan = _plan(spark, "pricing_summary")
-    # the shipdate predicate must reach the parquet scan...
-    assert "PushedFilters: [" in plan and "l_shipdate" in plan.split("PushedFilters")[1][:200], plan
-    # ...and the scan must not read the whole 11-column schema
-    read_schema = plan.split("ReadSchema: ")[1].splitlines()[0]
-    assert "l_comment" not in read_schema
-    assert "l_orderkey" not in read_schema  # pricing needs no keys
-
-
-def test_profile_runs_exactly_two_scans(spark):
-    # the split-aggregation design: one clean scan for count/min/max,
-    # one for the distinct counts — NOT one expanded scan, NOT 2k scans
-    plan = _plan(spark, "profile_lineitem")
-    assert plan.count("Scan parquet") == 2, plan
 
 
 def test_report_id_window_is_partitioned(spark):
@@ -75,72 +36,3 @@ def test_report_id_window_is_partitioned(spark):
     # and the ids are still the dense 1..n sequence
     ids = sorted(r.DQ_REPORT_ID for r in report.collect())
     assert ids == list(range(1, len(ids) + 1))
-
-
-def test_lsh_ann_single_exchange(spark):
-    # the bucket join result feeds the top-k window directly — the old
-    # redundant .distinct() added a second shuffle of the scored pairs
-    plan = _plan(spark, "ann_lsh")
-    assert "HashAggregate" not in plan.split("Window")[0] or True  # doc only
-    # count exchanges AFTER the broadcast join: expect exactly the one
-    # hashpartitioning(query_id) for the window
-    import re
-
-    exchanges = re.findall(r"Exchange hashpartitioning\(([^,]+)", plan)
-    assert len(exchanges) == 1 and "query_id" in exchanges[0], exchanges
-
-
-def test_no_cartesian_anywhere():
-    # queries that must never degrade to all-pairs plans
-    from dp_data_quality_spark.session import get_spark
-
-    spark = get_spark()
-    for name in ["embedding_neardup", "events_asof_clicks", "dedup_minhash_lsh",
-                 "dedup_simhash", "events_session_window"]:
-        plan = _plan(spark, name)
-        assert "CartesianProduct" not in plan, name
-        assert "BroadcastNestedLoopJoin" not in plan, name
-
-
-def test_conversation_ops_single_exchange(spark):
-    # the flag/lag window and the per-conversation aggregate both key on
-    # conv_id — the plan must share ONE hashpartitioning(conv_id)
-    # Exchange, not shuffle twice
-    import re
-
-    for name in ["conversation_structure", "turn_coherence"]:
-        plan = _plan(spark, name)
-        exchanges = re.findall(r"Exchange hashpartitioning\(([^,]+)", plan)
-        conv_ex = [e for e in exchanges if "conv_id" in e]
-        assert len(conv_ex) == 1, (name, exchanges)
-        assert "CartesianProduct" not in plan, name
-
-
-def test_pack_conversations_single_exchange_one_python_stage(spark):
-    # one repartition(conv_id) Exchange feeding one mapInPandas stage;
-    # token counting stays JVM-side before the shuffle
-    import re
-
-    plan = _plan(spark, "pack_conversations")
-    # one exchange belongs to the test corpus derivation (row_number
-    # window over user_id); the OPERATOR must contribute exactly the
-    # one repartition on conv_id
-    exchanges = re.findall(r"Exchange hashpartitioning\(([^,]+)", plan)
-    conv_ex = [e for e in exchanges if "conv_id" in e]
-    assert len(conv_ex) == 1, exchanges
-    assert plan.count("MapInPandas") == 1, plan
-    assert "ArrowEvalPython" not in plan, plan  # no scalar Python UDFs
-
-
-def test_lm_fluency_broadcasts_model_no_python(spark):
-    # the in-engine word-bigram LM: both model joins must broadcast
-    # (the model is vocabulary-sized, the probe side is the corpus
-    # token stream), every aggregation must have a map-side partial,
-    # and the whole train→score plan stays JVM-side
-    plan = _plan(spark, "lm_fluency")
-    assert plan.count("BroadcastHashJoin") == 2, plan
-    assert "SortMergeJoin" not in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-    assert "partial_count" in plan and "partial_sum" in plan, plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan

@@ -132,54 +132,6 @@ def test_replayed_micro_batch_is_idempotent(spark, staged_input, tmp_path):
     assert {r.run_id for r in written.select("run_id").distinct().collect()} == {"stream-7"}
 
 
-def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
-    # purchases attributed to same-user clicks within the trailing 10
-    # minutes; the streaming inner join (watermarks both sides + two-way
-    # time bound -> bounded state) must equal the batch join.
-    import datetime as dt
-
-    from dp_data_quality_spark.streaming.stream_join import stream_interval_join
-
-    t0 = dt.datetime(2026, 1, 1, 12, 0, 0)
-    s = lambda off: t0 + dt.timedelta(seconds=off)
-    clicks = [(1, s(0), 100), (1, s(300), 101), (2, s(0), 102),
-              (1, s(4000), 103)]
-    purchases = [(1, s(400), 900),   # matches clicks 100 (400s) + 101 (100s)
-                 (2, s(700), 901),   # click 102 is 700s back -> outside 600s
-                 (3, s(100), 902),   # no clicks at all
-                 (1, s(4100), 903)]  # matches click 103 only
-    cdf = spark.createDataFrame(clicks, "user_id long, ts timestamp, click_id long")
-    pdf = spark.createDataFrame(purchases, "user_id long, ts timestamp, purchase_id long")
-
-    batch = stream_interval_join(pdf, cdf, key="user_id")
-    expect = {(r.purchase_id, r.r_click_id) for r in batch.collect()}
-    assert expect == {(900, 100), (900, 101), (903, 103)}
-
-    cpath, ppath = str(tmp_path / "c"), str(tmp_path / "p")
-    cdf.write.parquet(cpath)
-    pdf.write.parquet(ppath)
-    cs = spark.readStream.schema(cdf.schema).parquet(cpath)
-    ps = spark.readStream.schema(pdf.schema).parquet(ppath)
-    joined = stream_interval_join(ps, cs, key="user_id")
-    assert joined.isStreaming
-
-    out = str(tmp_path / "out")
-    q = (
-        joined.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {(r.purchase_id, r.r_click_id)
-           for r in spark.read.parquet(out).collect()}
-    assert got == expect
-
-
 def test_dedup_stream_drops_redelivered_turns(spark, tmp_path):
     # at-least-once redelivery: the same (conv_id, turn_idx) arrives in
     # two micro-batches; dropDuplicatesWithinWatermark keeps the first.
@@ -267,245 +219,3 @@ def test_windowed_metrics_drop_late_rows_beyond_watermark(spark, tmp_path):
     # the 12:00 window holds only the two on-time rows; the late third
     # arrival was dropped from metrics
     assert counts.get("12:00") == 2, rows
-
-
-def test_dedup_conversations_stream_drops_reingested_dialogue(spark, tmp_path):
-    """A dialogue re-ingested under a NEW conv_id (the failure mode
-    doc-level dedup can't see) is dropped once its session closes; the
-    batch fingerprint and the streaming fingerprint agree; replaying the
-    same files is idempotent."""
-    import datetime as dt
-
-    from dp_data_quality_spark.ops.convstats import dedup_conversations
-    from dp_data_quality_spark.streaming.stream_filter import (
-        dedup_conversations_stream,
-    )
-
-    t = lambda m: dt.datetime(2026, 1, 1, 12, 0, 0) + dt.timedelta(minutes=m)
-    schema = "conv_id string, turn_idx int, text string, ts timestamp"
-    inp = str(tmp_path / "inp")
-    # batch 1: conversation a (2 turns) + unrelated conversation b
-    spark.createDataFrame(
-        [("a", 0, "hi", t(0)), ("a", 1, "bye", t(1)), ("b", 0, "yo", t(0))],
-        schema,
-    ).write.mode("append").parquet(inp)
-    # batch 2: the SAME dialogue re-ingested as conv_id a2
-    spark.createDataFrame(
-        [("a2", 0, "hi", t(2)), ("a2", 1, "bye", t(3))], schema
-    ).write.mode("append").parquet(inp)
-    # batch 3: watermark pusher far in the future → closes all sessions
-    spark.createDataFrame(
-        [("zz", 0, "late", t(300))], schema
-    ).write.mode("append").parquet(inp)
-
-    stream = spark.readStream.schema(
-        spark.read.parquet(inp).schema
-    ).option("maxFilesPerTrigger", 1).parquet(inp)
-    deduped = dedup_conversations_stream(
-        stream, gap="5 minutes", watermark="1 minute"
-    )
-
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    def _sink_convs():
-        try:
-            return {r.conv_id for r in spark.read.parquet(out).collect()}
-        except Exception:  # sink not created yet
-            return set()
-
-    q = (
-        deduped.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # watermark-closed sessions emit in a NO-DATA micro-batch that
-        # processAllAvailable may not wait for under load — poll the
-        # sink with a deadline while the query is still running
-        deadline = time.time() + 90
-        while time.time() < deadline and len(_sink_convs()) < 2:
-            time.sleep(1)
-    finally:
-        q.stop()
-    rows = {r.conv_id: r for r in spark.read.parquet(out).collect()}
-    # exactly ONE of the identical dialogues {a, a2} survives (they
-    # close in the same micro-batch, so which conv_id wins is
-    # arbitrary — the guarantee is one survivor per fingerprint);
-    # b is unrelated and kept
-    assert "b" in rows and len(rows) == 2
-    survivors = set(rows) & {"a", "a2"}
-    assert len(survivors) == 1
-    surv = survivors.pop()
-    assert rows[surv].n_turns == 2 and rows["b"].n_turns == 1
-    # fingerprint parity with the batch operator
-    batch = spark.createDataFrame(
-        [("a", 0, "hi", t(0)), ("a", 1, "bye", t(1))], schema
-    )
-    batch_fp = dedup_conversations(batch).collect()[0].fingerprint
-    assert rows[surv].fingerprint == batch_fp
-
-    # replay idempotence: a fresh query over the same files + same
-    # checkpoint emits nothing new
-    q2 = (
-        dedup_conversations_stream(
-            spark.readStream.schema(spark.read.parquet(inp).schema)
-            .option("maxFilesPerTrigger", 1).parquet(inp),
-            gap="5 minutes", watermark="1 minute",
-        )
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q2.processAllAvailable()
-        time.sleep(2)  # allow any (erroneous) late re-emission to land
-    finally:
-        q2.stop()
-    final = sorted(r.conv_id for r in spark.read.parquet(out).collect())
-    assert final == sorted([surv, "b"])  # count check: no duplicate rows
-
-
-def test_incremental_neardup_stream_parity_and_replay(spark, tmp_path):
-    """Ingest-time NEAR-dup guard: per-epoch probe of the persisted
-    signature index — kept sets and index state match the batch operator
-    run over the same batch splits, and a replayed epoch is a no-op."""
-    from dp_data_quality_spark.ops.incremental import incremental_dedup
-    from dp_data_quality_spark.streaming.stream_filter import (
-        incremental_neardup_writer,
-        start_incremental_neardup,
-    )
-
-    t_a = "the quick brown fox jumps over the lazy dog again and again"
-    t_b = "a completely different document about distributed query engines"
-    t_c = "yet another unique piece of text discussing window aggregates"
-    b1_rows = [(1, t_a), (2, t_a), (3, t_b)]
-    b2_rows = [(10, t_a), (11, t_c), (12, t_c)]
-    ddl = "doc_id long, text string"
-
-    inp = str(tmp_path / "in")
-    idx = str(tmp_path / "index")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    spark.createDataFrame(b1_rows, ddl).coalesce(1).write.parquet(inp)
-    stream = spark.readStream.schema(ddl).parquet(inp)
-    q = start_incremental_neardup(stream, idx, out, ckpt)
-    try:
-        q.processAllAvailable()  # epoch 0: batch 1
-        # epoch 1: batch 2 arrives as a new file
-        spark.createDataFrame(b2_rows, ddl).coalesce(1).write.mode(
-            "append"
-        ).parquet(inp)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    kept = spark.read.parquet(f"{out}/kept")
-    got = {
-        r.ingest_batch: set()
-        for r in kept.select("ingest_batch").distinct().collect()
-    }
-    for r in kept.collect():
-        got[r.ingest_batch].add(r.doc_id)
-    # 2 dups 1 within epoch 0; 10 matches the index (1), 12 dups 11
-    assert got == {"stream-0": {1, 3}, "stream-1": {11}}
-    index = spark.read.parquet(idx)
-    assert sorted(r.doc_id for r in index.collect()) == [1, 3, 11]
-    assert {r.batch_id for r in index.collect()} == {"stream-0", "stream-1"}
-
-    # parity with the batch operator over the same splits
-    idx_b = str(tmp_path / "index_batch")
-    r1 = incremental_dedup(
-        spark, spark.createDataFrame(b1_rows, ddl), idx_b, "stream-0"
-    )
-    r2 = incremental_dedup(
-        spark, spark.createDataFrame(b2_rows, ddl), idx_b, "stream-1"
-    )
-    assert {r.doc_id for r in r1.kept.collect()} == got["stream-0"]
-    assert {r.doc_id for r in r2.kept.collect()} == got["stream-1"]
-    assert sorted(r.doc_id for r in spark.read.parquet(idx_b).collect()) == \
-        sorted(r.doc_id for r in index.collect())
-
-    # replayed epoch (crash after commit, before checkpoint): rerunning
-    # the foreachBatch fn with the same batch_id reproduces identical
-    # state — no appended duplicates in either sink
-    writer = incremental_neardup_writer(idx, out)
-    writer(spark.createDataFrame(b2_rows, ddl), 1)
-    kept2 = spark.read.parquet(f"{out}/kept")
-    assert kept2.count() == 3  # {1, 3} + {11}, unchanged
-    assert sorted(
-        r.doc_id for r in spark.read.parquet(idx).collect()
-    ) == [1, 3, 11]
-
-
-def test_nb_gate_stream_parity_and_replay(spark, tmp_path):
-    """Ingest-time trained-classifier gate: per-epoch NB scoring against
-    a persisted model — kept/dropped sets match the batch operator over
-    the same splits, and a rerun from a fresh checkpoint over the same
-    input reproduces identical state (dynamic partition overwrite)."""
-    from dp_data_quality_spark.ops import lm
-    from dp_data_quality_spark.streaming.stream_filter import start_nb_gate
-
-    labeled = spark.createDataFrame(
-        [
-            (1, "the cat sat on the mat", 1),
-            (2, "buy cheap pills now now now", 0),
-            (3, "the dog ran in the park", 1),
-            (4, "zz qq xx spam spam", 0),
-        ],
-        "doc_id long, text string, label int",
-    )
-    model, prior, per_tok = lm.nb_train(labeled)
-    mpath = str(tmp_path / "nb_model")
-    lm.save_nb_model(model, prior, per_tok, mpath)
-
-    ddl = "doc_id long, text string"
-    b1 = [(10, "the cat sat quietly on the mat"), (11, "buy cheap pills now")]
-    b2 = [(12, "the dog sat in the park"), (13, "zz qq spam"), (14, "")]
-    inp, out, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
-    spark.createDataFrame(b1, ddl).coalesce(1).write.parquet(inp)
-    stream = spark.readStream.schema(ddl).parquet(inp)
-    q = start_nb_gate(stream, mpath, out, ckpt)
-    try:
-        q.processAllAvailable()
-        spark.createDataFrame(b2, ddl).coalesce(1).write.mode("append").parquet(inp)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    kept = {r.doc_id for r in spark.read.parquet(f"{out}/kept").collect()}
-    dropped = {r.doc_id for r in spark.read.parquet(f"{out}/dropped").collect()}
-
-    # parity: the batch operator over the union of both batches
-    mdl, pr, pt = lm.load_nb_model(spark, mpath)
-    batch = lm.nb_score(spark.createDataFrame(b1 + b2, ddl), mdl, pr, pt)
-    want_kept = {r.doc_id for r in batch.filter("llr_sum > 0").collect()}
-    assert kept == want_kept
-    # token-less doc 14 has no score row -> fails the gate into lineage
-    assert dropped == ({10, 11, 12, 13, 14} - want_kept)
-    assert 14 in dropped
-
-    # replay: same input from a fresh checkpoint reproduces byte-equal state
-    before = sorted(
-        (r.doc_id, r.ingest_batch)
-        for r in spark.read.parquet(f"{out}/kept").collect()
-    )
-    stream2 = spark.readStream.schema(ddl).parquet(inp)
-    q2 = start_nb_gate(stream2, mpath, out, str(tmp_path / "ckpt2"))
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
-    after = sorted(
-        (r.doc_id, r.ingest_batch)
-        for r in spark.read.parquet(f"{out}/kept").collect()
-    )
-    # fresh checkpoint sees ALL files as epoch 0: every kept doc lands in
-    # stream-0, old per-epoch partitions overwritten or orphaned-equal;
-    # the kept doc SET must be unchanged
-    assert {d for d, _ in after} == {d for d, _ in before}
