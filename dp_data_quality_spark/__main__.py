@@ -53,7 +53,7 @@ def _filter_cmd(args: argparse.Namespace) -> int:
 def _report_cmd(args: argparse.Namespace) -> int:
     from .config import RulesConfig
     from .plans.report import build_quality_report
-    from .session import get_spark
+    from .session import get_spark, write_text
 
     spark = get_spark("quality-report")
     if args.rules_config.lower().endswith(".csv"):
@@ -80,20 +80,10 @@ def _report_cmd(args: argparse.Namespace) -> int:
         import datetime
 
         now = datetime.date.today().isoformat()
-        # write through the Hadoop FileSystem API so URI outputs
-        # (s3a://, hdfs://, file:/) work — pathlib would mangle the
-        # scheme ('s3a://b/x' -> 's3a:/b/x') after the report succeeded
-        jvm = spark._jvm
-        out_path = jvm.org.apache.hadoop.fs.Path(args.output, "_NO_ISSUES.txt")
-        fs = out_path.getFileSystem(spark._jsc.hadoopConfiguration())
-        stream = fs.create(out_path, True)
-        try:
-            stream.write(bytearray(
-                f"As of {now}, {args.table_name} does not have any data "
-                "quality issues.", "utf-8"))
-        finally:
-            stream.close()
-        marker = str(out_path.toString())
+        marker = write_text(
+            spark, f"{args.output.rstrip('/')}/_NO_ISSUES.txt",
+            f"As of {now}, {args.table_name} does not have any data "
+            "quality issues.")
     print(json.dumps({"report_path": args.output, "report_rows": n,
                       "no_issues_marker": marker}))
     return 0

@@ -14,24 +14,29 @@ Scale design:
   — deterministic files, no global window (the reference's single-task
   ROW_ID shuffle, validation_rulebook.py:102-103, is gone).
 - checkpoint-resume: each completed bucket appends a lineage row to the
-  metrics table; a rerun anti-joins completed buckets (broadcast — the
-  bucket list is tiny) and dynamic partition overwrite keeps data writes
-  idempotent if a run dies between data and metrics commits.
+  metrics table; a rerun filters completed buckets out of the input, and
+  dynamic partition overwrite keeps data writes idempotent if a run dies
+  between data and metrics commits.  ``_manifest.json`` pins the output
+  to one snapshot, ``n_buckets`` and config: a rerun with any other
+  raises instead of mixing two outputs.
+- commit order: manifest → data → metrics.  The metrics table is the
+  commit log, so a bucket counts as done only once its data is written.
 - single-pass sink: the scored stream is written once, partitioned by
   (keep, bucket) — kept data and per-row drop lineage in one job — and
   per-bucket metrics aggregate from the committed columnar output, so
   the expensive scoring projection never runs twice and nothing wide is
-  persisted.
+  persisted.  A fresh run is 5 Spark jobs: 2 to score and write, 3 to
+  aggregate the metrics from one scan and write them.
 """
 
 from __future__ import annotations
 
 import hashlib
-from dataclasses import dataclass
-from pathlib import Path
+import json
+from dataclasses import asdict, dataclass
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -39,6 +44,7 @@ from .config import FilterConfig
 from .functions import heuristics as H
 from .functions.perplexity import make_scorer_udf
 from .functions.scrub import scrub_text
+from .session import read_text, write_text
 
 METRICS_SCHEMA = T.StructType([
     T.StructField("partition_key", T.StringType()),
@@ -65,6 +71,8 @@ OUTPUT_COLUMNS = [
     "bucket", "conv_id", "turn_idx", "role", "tool", "ts",
     "lang", "lang_conf", "ppl", "scrubbed_text", "drop_reasons",
 ]
+# The sink columns the metrics aggregate reads back.
+SCORED_READ_SCHEMA = "keep INT, bucket INT, drop_reasons ARRAY<STRING>"
 
 
 def score_turns(
@@ -134,6 +142,41 @@ def snapshot_fingerprint(df: DataFrame, explicit: str | None = None) -> str:
     return hashlib.md5("\n".join(files).encode()).hexdigest()[:16]
 
 
+def run_manifest(
+    snapshot_id: str, n_buckets: int, cfg: FilterConfig, ppl_table=None
+) -> dict:
+    """What an output directory's rows are a function of.  The config
+    hash covers the canonical JSON of ``cfg`` (a tuple field and the same
+    values as a list hash alike) and the bytes of ``ppl_table``."""
+    h = hashlib.sha256(json.dumps(asdict(cfg), sort_keys=True).encode())
+    if ppl_table is not None:
+        h.update(ppl_table.tobytes())
+    return {
+        "snapshot_id": snapshot_id,
+        "n_buckets": n_buckets,
+        "config_hash": h.hexdigest()[:16],
+    }
+
+
+def check_manifest(spark: SparkSession, path: str, manifest: dict) -> bool:
+    """``True`` if the manifest at ``path`` equals ``manifest``, ``False``
+    if there is none.  A different one raises: resuming or overwriting
+    buckets of another snapshot, bucketing or config would mix two
+    outputs in one table."""
+    text = read_text(spark, path)
+    if text is None:
+        return False
+    prior = json.loads(text)
+    diff = [k for k in manifest if prior.get(k) != manifest[k]]
+    if diff:
+        raise ValueError(
+            f"{path} was written with a different "
+            + ", ".join(f"{k} ({prior.get(k)!r}, now {manifest[k]!r})" for k in diff)
+            + "; delete the output directory to start over"
+        )
+    return True
+
+
 @dataclass
 class PipelineResult:
     kept_path: str
@@ -142,26 +185,25 @@ class PipelineResult:
     buckets_skipped: int
 
 
-def read_completed_buckets(spark: SparkSession, metrics_path: str) -> DataFrame | None:
-    """Buckets a previous run committed, or ``None`` on a fresh start.
+def read_completed_buckets(spark: SparkSession, metrics_path: str) -> list[int]:
+    """Sorted ids of the buckets a previous run committed; empty on a
+    fresh start.
 
     Only a missing metrics directory counts as a fresh start.  Any other
     read error propagates: treating it as "nothing completed" would
     reprocess every bucket and append their metrics rows a second time.
     The explicit schema makes a directory with no committed part files
     (a crash during the metrics write leaves only ``_temporary/``) read
-    as empty instead of failing schema inference."""
+    as empty instead of failing schema inference.  The table holds one
+    row per bucket per run, so it is collected as is (one job)."""
     try:
         m = spark.read.schema(METRICS_SCHEMA).parquet(metrics_path)
     except AnalysisException as e:
         if e.getCondition() == "PATH_NOT_FOUND":
-            return None
+            return []
         raise
-    return (
-        m.filter(F.col("status") == "completed")
-        .select(F.col("partition_key").cast("int").alias("bucket"))
-        .distinct()
-    )
+    rows = m.filter(F.col("status") == "completed").select("partition_key").collect()
+    return sorted({int(r.partition_key) for r in rows})
 
 
 def rollup_keep_by_conversation(df: DataFrame, min_keep_frac: float) -> DataFrame:
@@ -206,6 +248,10 @@ def run_pipeline(
 ) -> PipelineResult:
     """Score + filter + scrub ``input_df`` (input_hint schema), writing:
 
+    - ``{output_dir}/_manifest.json`` — snapshot id, ``n_buckets`` and a
+      config hash.  A run into a directory whose manifest differs raises
+      ``ValueError`` naming the fields, whatever ``resume`` is; delete the
+      directory to start over.
     - ``{output_dir}/scored``  — ONE pass, partitioned by (keep, bucket):
       ``keep=1`` subtree = kept turns with scrubbed_text (the filtered
       table, sorted by (conv_id, turn_idx) within files); ``keep=0``
@@ -214,36 +260,36 @@ def run_pipeline(
       aggregated from the already-written columnar output (a pruned
       3-column scan), NOT from a cached recompute.
 
-    Single-pass design: the expensive scoring projection (pandas-UDF
-    langid/ppl + scrub) runs exactly once, streaming into the
-    partitioned write — no ``persist`` of wide rows, no second scoring
-    pass for metrics.  Metrics commit strictly after data commit, so a
-    crash between the two leaves re-doable (never half-counted) buckets.
+    They commit in that order, in 5 Spark jobs on a fresh run.  The
+    expensive scoring projection (pandas-UDF langid/ppl + scrub) runs
+    exactly once, streaming into the partitioned write — no ``persist``
+    of wide rows, no second scoring pass for metrics.  Metrics commit
+    strictly after data, so a crash between the two leaves re-doable
+    (never half-counted) buckets.  A resume that finds every bucket
+    completed returns after reading the metrics (one job).
     """
     cfg = cfg or FilterConfig()
-    out = Path(output_dir)
-    scored_path = str(out / "scored")
-    kept_path = scored_path + "/keep=1"
-    metrics_path = str(out / "metrics")
+    # joined as strings: pathlib would mangle a URI ('s3a://b/o' -> 's3a:/b/o')
+    out = output_dir.rstrip("/")
+    scored_path = f"{out}/scored"
+    kept_path = f"{scored_path}/keep=1"
+    metrics_path = f"{out}/metrics"
+    manifest_path = f"{out}/_manifest.json"
     snap = snapshot_fingerprint(input_df, snapshot_id)
+    manifest = run_manifest(snap, n_buckets, cfg, ppl_table)
+
+    # the manifest is written only after the metrics read, so a run that
+    # raises on either check leaves the output directory untouched
+    has_manifest = check_manifest(spark, manifest_path, manifest)
+    done_buckets = read_completed_buckets(spark, metrics_path) if resume else []
+    if not has_manifest:
+        write_text(spark, manifest_path, json.dumps(manifest, sort_keys=True), overwrite=False)
+    if len(done_buckets) == n_buckets:
+        return PipelineResult(kept_path, metrics_path, 0, n_buckets)
 
     df = with_bucket(input_df, n_buckets)
-
-    skipped = 0
-    done_buckets: list[int] = []
-    if resume:
-        done = read_completed_buckets(spark, metrics_path)
-        if done is not None:
-            done_buckets = [r.bucket for r in done.collect()]
-            skipped = len(done_buckets)
-            if skipped:
-                df = df.join(F.broadcast(done), on="bucket", how="left_anti")
-
-    # Nothing to do (fresh empty input, or every bucket already completed):
-    # bail before the write — an empty partitioned write commits no part
-    # files, and the metrics read below would fail schema inference.
-    if df.isEmpty():
-        return PipelineResult(kept_path, metrics_path, 0, skipped)
+    if done_buckets:
+        df = df.filter(~F.col("bucket").isin(done_buckets))
 
     # Repartition on the bucket key BEFORE scoring: (a) scoring parallelism
     # no longer depends on input file layout (a compact parquet would
@@ -288,41 +334,50 @@ def run_pipeline(
         .parquet(scored_path)
     )
 
-    # lineage metrics from the committed output: pruned columnar scan of
-    # (keep, bucket, drop_reasons) only — the text columns are never read.
-    written = spark.read.parquet(scored_path)
+    # lineage metrics from the committed files, in one pruned scan of
+    # (keep, bucket, drop_reasons): posexplode_outer yields one row per
+    # (turn, reason), or one with a null pos for a turn with no reason,
+    # so each turn is counted once, at its first position.
+    written = spark.read.schema(SCORED_READ_SCHEMA).parquet(scored_path)
     if done_buckets:
         written = written.filter(~F.col("bucket").isin(done_buckets))
-    base = written.groupBy("bucket").agg(
-        F.count("*").alias("rows_in"),
-        F.sum(F.col("keep")).alias("rows_kept"),
-    )
-    hits = (
-        written.select("bucket", F.explode("drop_reasons").alias("reason"))
+    first = F.coalesce(F.col("pos"), F.lit(0)) == 0
+    per_reason = (
+        written.select(
+            "bucket", "keep",
+            F.posexplode_outer("drop_reasons").alias("pos", "reason"),
+        )
         .groupBy("bucket", "reason")
-        .count()
-        .groupBy("bucket")
-        .agg(F.map_from_entries(
-            F.collect_list(F.struct("reason", "count"))).alias("rule_hits"))
+        .agg(
+            F.count_if(first).alias("rows_in"),
+            F.sum(F.when(first, F.col("keep"))).alias("rows_kept"),
+            F.count("reason").alias("hits"),
+        )
     )
-    metrics = (
-        base.join(hits, on="bucket", how="left")
-        .select(
+    metrics = per_reason.groupBy("bucket").agg(
+        F.sum("rows_in").alias("rows_in"),
+        F.sum("rows_kept").alias("rows_kept"),
+        F.map_from_entries(F.collect_list(
+            F.when(F.col("reason").isNotNull(), F.struct("reason", "hits"))
+        )).alias("rule_hits"),
+    )
+    written_buckets = Observation()
+    (
+        metrics.select(
             F.col("bucket").cast("string").alias("partition_key"),
             F.lit(snap).alias("snapshot_id"),
             F.col("rows_in"),
             F.col("rows_kept"),
             (F.col("rows_in") - F.col("rows_kept")).alias("rows_dropped"),
-            F.coalesce(
-                "rule_hits",
-                F.create_map().cast("map<string,bigint>"),
-            ).alias("rule_hits"),
+            F.col("rule_hits"),
             F.lit("completed").alias("status"),
             F.lit(run_id).alias("run_id"),
             F.current_timestamp().alias("completed_at"),
         )
+        .observe(written_buckets, F.count(F.lit(1)).alias("n"))
+        .write.mode("append")
+        .parquet(metrics_path)
     )
-    buckets = metrics.count()
-    if buckets:
-        metrics.write.mode("append").parquet(metrics_path)
-    return PipelineResult(kept_path, metrics_path, buckets, skipped)
+    return PipelineResult(
+        kept_path, metrics_path, written_buckets.get["n"], len(done_buckets)
+    )

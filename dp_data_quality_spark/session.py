@@ -69,3 +69,35 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
+
+
+def _hadoop_fs(spark: SparkSession, path: str):
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p, p.getFileSystem(spark._jsc.hadoopConfiguration())
+
+
+def read_text(spark: SparkSession, path: str) -> str | None:
+    """The UTF-8 file at ``path``, or ``None`` if there is none.  Goes
+    through the Hadoop FileSystem API, so URI paths (s3a://, hdfs://,
+    file:) work, and runs no Spark job."""
+    p, fs = _hadoop_fs(spark, path)
+    if not fs.exists(p):
+        return None
+    stream = fs.open(p)
+    try:
+        return bytes(stream.readAllBytes()).decode("utf-8")
+    finally:
+        stream.close()
+
+
+def write_text(spark: SparkSession, path: str, text: str, overwrite: bool = True) -> str:
+    """Write ``text`` as UTF-8 to ``path`` through the Hadoop FileSystem
+    API (pathlib would mangle the scheme: 's3a://b/x' -> 's3a:/b/x').
+    Returns the qualified path."""
+    p, fs = _hadoop_fs(spark, path)
+    stream = fs.create(p, overwrite)
+    try:
+        stream.write(bytearray(text, "utf-8"))
+    finally:
+        stream.close()
+    return str(p.toString())

@@ -5,6 +5,8 @@ checkpoint-resume, and stable output ordering under input perturbation.
 
 from __future__ import annotations
 
+import shutil
+
 import pandas as pd
 import pytest
 from py4j.protocol import Py4JJavaError
@@ -13,6 +15,9 @@ from pyspark.sql import functions as F
 from dp_data_quality_spark import synth
 from dp_data_quality_spark.config import FilterConfig
 from dp_data_quality_spark.pipeline import (
+    METRICS_SCHEMA,
+    SCORED_READ_SCHEMA,
+    read_completed_buckets,
     rollup_keep_by_conversation,
     run_pipeline,
     score_turns,
@@ -29,6 +34,22 @@ SEED = 42
 @pytest.fixture(scope="module")
 def transcripts(spark):
     return synth.strip_truth(synth.transcripts(spark, N_CONVS, seed=SEED)).cache()
+
+
+def in_job_group(spark, group, fn):
+    """Run ``fn()`` under job group ``group``; return its result and the
+    ids of the Spark jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def files_under(root):
+    return {str(p.relative_to(root)): p.read_bytes() for p in root.rglob("*") if p.is_file()}
 
 
 def test_synth_deterministic(spark):
@@ -106,8 +127,6 @@ def test_pipeline_resume_skips_completed(spark, transcripts, tmp_path):
     metrics = spark.read.parquet(full.metrics_path)
     partial = metrics.limit(3).cache()
     partial.count()
-    import shutil
-
     shutil.rmtree(full.metrics_path)
     partial.write.mode("overwrite").parquet(full.metrics_path)
 
@@ -120,6 +139,18 @@ def test_pipeline_resume_skips_completed(spark, transcripts, tmp_path):
     # no bucket processed twice
     m2 = spark.read.parquet(res2.metrics_path)
     assert m2.groupBy("partition_key").count().filter("count > 1").count() == 0
+
+    # every bucket completed: the rerun runs no job beyond the metrics read
+    # and leaves the scored files as they are
+    scored = tmp_path / "out" / "scored"
+    before = files_under(scored)
+    res3, jobs = in_job_group(spark, "resume-done", lambda: run_pipeline(
+        spark, transcripts, out, cfg=CFG, n_buckets=8, run_id="r3"))
+    assert (res3.buckets_processed, res3.buckets_skipped) == (0, 8)
+    _, read_jobs = in_job_group(spark, "resume-done-read", lambda: read_completed_buckets(
+        spark, res3.metrics_path))
+    assert len(jobs) == len(read_jobs)
+    assert files_under(scored) == before
 
 
 def test_stable_ordering_under_input_shuffle(spark, transcripts, tmp_path):
@@ -176,8 +207,6 @@ def test_crash_between_data_and_metrics_is_idempotent(spark, transcripts, tmp_pa
     commit never happened.  A rerun must reprocess (no completed buckets
     recorded) and converge to the same final tables — dynamic partition
     overwrite makes the data write idempotent."""
-    import shutil
-
     out = str(tmp_path / "out")
     full = run_pipeline(spark, transcripts, out, cfg=CFG, n_buckets=8, run_id="r1")
     baseline = sorted(map(tuple, spark.read.parquet(full.kept_path)
@@ -195,12 +224,15 @@ def test_crash_between_data_and_metrics_is_idempotent(spark, transcripts, tmp_pa
 
 
 def test_empty_input_returns_clean_result(spark, transcripts, tmp_path):
-    # a fresh run over zero rows must not attempt the metrics read
-    # (no part files are committed -> schema inference would fail)
+    # zero rows take the normal path: the scored table and the metrics
+    # table are committed and read back empty
     empty = transcripts.filter(F.lit(False))
     res = run_pipeline(spark, empty, str(tmp_path / "out"), n_buckets=4, run_id="r0")
     assert res.buckets_processed == 0
     assert res.buckets_skipped == 0
+    scored = spark.read.schema(SCORED_READ_SCHEMA).parquet(str(tmp_path / "out" / "scored"))
+    assert scored.count() == 0
+    assert spark.read.schema(METRICS_SCHEMA).parquet(res.metrics_path).count() == 0
 
 
 def test_run_pipeline_leaves_session_conf_unchanged(spark, transcripts, tmp_path):
@@ -211,26 +243,19 @@ def test_run_pipeline_leaves_session_conf_unchanged(spark, transcripts, tmp_path
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     assert spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled") == "true"
     n_buckets = 16  # above the 4 input partitions and 4 shuffle partitions
-    sc = spark.sparkContext
     before = {r.key: r.value for r in spark.sql("SET").collect()}
-    sc.setJobGroup("conf-check", "run_pipeline session conf check")
-    try:
-        run_pipeline(spark, transcripts, str(tmp_path / "out"), cfg=CFG,
-                     n_buckets=n_buckets, run_id="c")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    _, jobs = in_job_group(spark, "conf-check", lambda: run_pipeline(
+        spark, transcripts, str(tmp_path / "out"), cfg=CFG, n_buckets=n_buckets, run_id="c"))
     after = {r.key: r.value for r in spark.sql("SET").collect()}
     assert after == before
+    # score + write (2), metrics aggregate from one scan + write (3)
+    assert len(jobs) == 5, jobs
 
-    st = sc.statusTracker()
+    st = spark.sparkContext.statusTracker()
     # once a session has run more than spark.ui.retainedStages stages, the
     # status store evicts skipped stages first, so a job's skipped stage
     # ids can have no StageInfo; skipped stages ran no tasks
-    infos = [
-        st.getStageInfo(sid)
-        for jid in st.getJobIdsForGroup("conf-check")
-        for sid in st.getJobInfo(jid).stageIds
-    ]
+    infos = [st.getStageInfo(sid) for jid in jobs for sid in st.getJobInfo(jid).stageIds]
     tasks = [i.numTasks for i in infos if i is not None]
     # every other stage (input scan, metrics scan and aggregates) has at
     # most 4 tasks here, so the widest stage is the scoring stage
@@ -260,6 +285,53 @@ def test_unreadable_metrics_raise_instead_of_restarting(spark, transcripts, tmp_
     with pytest.raises(Py4JJavaError, match="not a Parquet file"):
         run_pipeline(spark, transcripts, str(out), cfg=CFG, n_buckets=4, run_id="r1")
     assert not (out / "scored").exists()
+
+
+def test_rerun_with_other_n_buckets_raises(spark, transcripts, tmp_path):
+    """Resuming a 4-bucket output with 8 buckets would skip buckets 0-3
+    and write the turns that now hash to buckets 4-7 a second time.  The
+    manifest makes the rerun raise instead, and so does an overwrite,
+    which would leave the old bucket directories behind."""
+    out = str(tmp_path / "out")
+    run_pipeline(spark, transcripts, out, cfg=CFG, n_buckets=4, run_id="r1")
+    before = files_under(tmp_path / "out")
+    for resume in (True, False):
+        with pytest.raises(ValueError, match="n_buckets"):
+            run_pipeline(spark, transcripts, out, cfg=CFG, n_buckets=8,
+                         run_id="r2", resume=resume)
+    assert files_under(tmp_path / "out") == before
+
+
+def test_rerun_with_other_snapshot_or_config_raises(spark, transcripts, tmp_path):
+    """A rerun on another snapshot would skip every completed bucket and
+    never write the new snapshot's turns; one with another config would
+    mix two filters in one table.  Both raise.  The same snapshot and
+    config, with tuple fields given as lists, still resumes."""
+    out = str(tmp_path / "out")
+    run_pipeline(spark, transcripts, out, cfg=CFG, n_buckets=4, run_id="r1",
+                 snapshot_id="snap-a")
+    other = synth.strip_truth(synth.transcripts(spark, 30, seed=SEED + 1))
+    with pytest.raises(ValueError, match="snapshot_id"):
+        run_pipeline(spark, other, out, cfg=CFG, n_buckets=4, run_id="r2",
+                     snapshot_id="snap-b")
+    with pytest.raises(ValueError, match="config_hash"):
+        run_pipeline(spark, transcripts, out, cfg=FilterConfig(ppl_max=1e4),
+                     n_buckets=4, run_id="r2", snapshot_id="snap-a")
+    same = FilterConfig(expected_langs=["en"],
+                        boilerplate_prefixes=list(CFG.boilerplate_prefixes))
+    res = run_pipeline(spark, transcripts, out, cfg=same, n_buckets=4, run_id="r2",
+                       snapshot_id="snap-a")
+    assert (res.buckets_processed, res.buckets_skipped) == (0, 4)
+
+
+def test_uri_output_keeps_scheme(spark, transcripts, tmp_path):
+    out = (tmp_path / "out").as_uri()
+    res = run_pipeline(spark, transcripts, out, cfg=CFG, n_buckets=2, run_id="u")
+    assert res.kept_path == out + "/scored/keep=1"
+    assert res.metrics_path == out + "/metrics"
+    metrics = spark.read.parquet(res.metrics_path)
+    assert metrics.agg(F.sum("rows_in")).first()[0] == transcripts.count()
+    assert (tmp_path / "out" / "_manifest.json").exists()
 
 
 def test_transcripts_pipeline_pinned(spark):
