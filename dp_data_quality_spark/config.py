@@ -42,17 +42,6 @@ class RulesConfig:
     def attribute_names(self) -> list[str]:
         return [c.attribute_name for c in self.columns]
 
-    def by_datatype(self, data_columns: list[str]) -> dict[str, list[str]]:
-        """Group governed columns by datatype, restricted to columns present
-        in the data (separate_columns_by_datatype, validation_rulebook.py:192-212).
-        Returns upper-cased names like the reference."""
-        data_up = {c.upper() for c in data_columns}
-        out: dict[str, list[str]] = {}
-        for spec in self.columns:
-            if spec.data_type and spec.name_upper in data_up:
-                out.setdefault(spec.data_type, []).append(spec.name_upper)
-        return out
-
     def spec_for(self, column: str) -> ColumnSpec | None:
         cu = column.upper()
         for spec in self.columns:

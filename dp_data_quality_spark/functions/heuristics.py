@@ -2,9 +2,7 @@
 
 These are the engine's quality gates beyond the reference contract
 (north rule: repetition ratio, symbol/word ratio, min/max length,
-boilerplate detection).  Everything here whole-stage-codegens; the only
-array materialized is the whitespace token split, reused across
-expressions via a single projection.
+boilerplate detection).  Everything here whole-stage-codegens.
 """
 
 from __future__ import annotations
@@ -15,26 +13,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import FilterConfig
-
-
-def words_col(text: Column) -> Column:
-    """Whitespace tokenization; empty/blank text → empty array."""
-    trimmed = F.trim(text)
-    return F.when(F.length(trimmed) == 0, F.array().cast("array<string>")).otherwise(
-        F.split(trimmed, r"\s+")
-    )
-
-
-def n_words(words: Column) -> Column:
-    return F.size(words)
-
-
-def repetition_ratio(words: Column) -> Column:
-    """1 - distinct_words/words ∈ [0,1]; 0 for empty text."""
-    n = F.size(words)
-    return F.when(n == 0, F.lit(0.0)).otherwise(
-        1.0 - F.size(F.array_distinct(words)) / n.cast("double")
-    )
 
 
 def symbol_ratio(text: Column) -> Column:
@@ -57,15 +35,13 @@ def boilerplate_hit(text: Column, prefixes: tuple[str, ...]) -> Column:
     return F.coalesce(text.rlike(rf"(?i)^\s*({alt})"), F.lit(False))
 
 
-def add_heuristic_columns(
-    df: DataFrame, text_col: str, cfg: FilterConfig, include_word_stats: bool = True
-) -> DataFrame:
-    """One projection adding n_chars, symbol ratio, boilerplate flag —
-    plus n_words/repetition_ratio when ``include_word_stats`` (the
-    pipeline passes False: its fused scorer UDF computes word stats from
-    the byte buffer it already holds, so the JVM never splits words).
+def add_heuristic_columns(df: DataFrame, text_col: str, cfg: FilterConfig) -> DataFrame:
+    """One projection adding n_chars, symbol ratio and boilerplate flag.
+    n_words and repetition_ratio come from the fused scorer UDF
+    (``perplexity.make_scorer_udf``), which computes them from the byte
+    buffer it already holds, so the JVM never splits words.
 
-    Like langid/perplexity, the word- and character-class features are
+    Like langid/perplexity, the character-class features are
     computed over the first ``cfg.score_prefix_chars`` characters (the
     whole text when 0): quality ratios estimated from a bounded prefix
     are statistically equivalent for filtering, and the bound is what
@@ -78,26 +54,18 @@ def add_heuristic_columns(
         if cfg.score_prefix_chars
         else t
     )
-    cols = [
+    return df.select(
+        "*",
         F.coalesce(F.length(t), F.lit(0)).alias("n_chars"),
         symbol_ratio(pt).alias("symbol_ratio"),
         boilerplate_hit(t, cfg.boilerplate_prefixes).alias("boilerplate"),
-    ]
-    if not include_word_stats:
-        return df.select("*", *cols)
-    df = df.withColumn("__words", words_col(pt))
-    return df.select(
-        "*",
-        n_words(F.col("__words")).alias("n_words"),
-        repetition_ratio(F.col("__words")).alias("repetition_ratio"),
-        *cols,
-    ).drop("__words")
+    )
 
 
 def heuristic_drop_reasons(cfg: FilterConfig) -> list[tuple[str, Column]]:
     """(reason, fail_expr) pairs over the columns added by
-    add_heuristic_columns; evaluated in the same wide select as the
-    contract rules."""
+    add_heuristic_columns and the scorer's word stats; evaluated in the
+    same wide select as the contract rules."""
     return [
         ("too_short", F.col("n_chars") < cfg.min_chars),
         ("too_long", F.col("n_chars") > cfg.max_chars),

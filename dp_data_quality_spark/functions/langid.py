@@ -6,20 +6,18 @@ trigram counts over the vocabulary corpus are hashed into 2¹⁶ buckets and
 smoothed into log-probabilities — the same hashed-n-gram trick fastText
 uses, sized for a sandbox.
 
-Scoring is an Arrow-batched pandas UDF (Series → Series of structs):
-texts are NUL-concatenated into one byte buffer, bucket gathers and
-``np.add.reduceat`` produce per-row per-language log-likelihoods — zero
-per-row Python.  The (L × 65536) float32 table is shipped to executors
-once via ``SparkContext.broadcast``.
+Scoring runs inside the fused scorer UDF (``perplexity.make_scorer_udf``):
+texts are NUL-concatenated into one byte buffer (``ngram.encode_batch``,
+a per-row Python loop), then bucket gathers and ``np.add.reduceat``
+produce per-row per-language log-likelihoods with no per-row Python.
+The (65536 × L) float32 table is shipped to executors once via
+``SparkContext.broadcast``.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..synth import LANG_VOCAB
 from . import ngram
@@ -49,11 +47,6 @@ def _train_table() -> np.ndarray:
 # single contiguous fancy-index (see ngram.rowwise_ngram_stats).
 _TABLE = np.ascontiguousarray(_train_table().T)
 
-_RESULT_TYPE = T.StructType([
-    T.StructField("lang", T.StringType()),
-    T.StructField("lang_conf", T.DoubleType()),
-])
-
 
 def score_batch(texts: pd.Series, table: np.ndarray) -> pd.DataFrame:
     """Vectorized batch scorer → DataFrame(lang, lang_conf)."""
@@ -78,14 +71,3 @@ def score_from_buffer(buf, offsets, lengths, table: np.ndarray) -> pd.DataFrame:
     langs[und] = "und"
     conf[und] = 0.0
     return pd.DataFrame({"lang": langs, "lang_conf": conf})
-
-
-def make_langid_udf(spark: SparkSession):
-    """Broadcast the model once; return a pandas UDF usable in a select."""
-    bc = spark.sparkContext.broadcast(_TABLE)
-
-    @F.pandas_udf(_RESULT_TYPE)
-    def langid_udf(texts: pd.Series) -> pd.DataFrame:
-        return score_batch(texts, bc.value)
-
-    return langid_udf

@@ -1,10 +1,11 @@
 """Shared byte-n-gram hashing for the langid and perplexity scorers.
 
-The scoring hot path is fully numpy-vectorized over an Arrow batch: all
-texts in the batch are UTF-8 encoded into ONE contiguous byte buffer with
-NUL separators, n-gram bucket indexes are computed with vectorized
-integer arithmetic, per-row aggregation uses ``np.add.reduceat`` — no
-per-row Python loop anywhere (north rule).  N-grams touching a NUL
+All texts in an Arrow batch are UTF-8 encoded into ONE contiguous byte
+buffer with NUL separators; n-gram bucket indexes are then computed with
+vectorized integer arithmetic and per-row aggregation uses
+``np.add.reduceat``.  The kernels have no per-row Python loop, but
+``encode_batch`` still has one: it turns each row into a Python ``str``,
+encodes it and copies it into the buffer.  N-grams touching a NUL
 separator are masked out, so no n-gram crosses a row boundary.
 """
 

@@ -7,9 +7,10 @@ smoothing, the same scheme a hashed KenLM-lite would use).  Per turn:
     ppl = exp(-mean log P(4-gram))
 
 Fluent in-domain text scores low; gibberish / symbol soup / foreign text
-scores high.  Scoring shares the vectorized NUL-concatenated-buffer path
-with langid (functions/ngram.py) — Arrow batches in, numpy all the way
-down, zero per-row Python.
+scores high.  Scoring shares the NUL-concatenated-buffer path with
+langid (functions/ngram.py): Arrow batches in, then numpy kernels with
+no per-row Python.  Building the buffer (``ngram.encode_batch``) still
+loops over the rows in Python.
 """
 
 from __future__ import annotations
@@ -99,16 +100,6 @@ def ppl_from_buffer(buf, offsets, table: np.ndarray) -> pd.Series:
     return pd.Series(ppl)
 
 
-def make_ppl_udf(spark: SparkSession, table: np.ndarray | None = None):
-    bc = spark.sparkContext.broadcast(_TABLE if table is None else table)
-
-    @F.pandas_udf(T.DoubleType())
-    def ppl_udf(texts: pd.Series) -> pd.Series:
-        return ppl_batch(texts, bc.value)
-
-    return ppl_udf
-
-
 # --- fused scorer: one Arrow transfer, one UTF-8 encode pass --------------
 # langid + perplexity + word statistics (n_words, repetition ratio) all
 # read the same NUL-separated byte buffer; the JVM never splits words.
@@ -127,7 +118,6 @@ def make_scorer_udf(spark: SparkSession, ppl_table: np.ndarray | None = None):
     batch and is UTF-8-encoded once per batch.  ``ppl_table`` overrides
     the import-time hermetic model with a corpus-trained one
     (``train_table_distributed``)."""
-    from . import ngram
     from .langid import _TABLE as LANG_TABLE
     from .langid import score_from_buffer
 

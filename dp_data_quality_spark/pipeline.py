@@ -35,7 +35,6 @@ import hashlib
 import json
 from dataclasses import asdict, dataclass
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -44,7 +43,7 @@ from .config import FilterConfig
 from .functions import heuristics as H
 from .functions.perplexity import make_scorer_udf
 from .functions.scrub import scrub_text
-from .session import read_text, write_text
+from .session import exists, read_text, write_text
 
 METRICS_SCHEMA = T.StructType([
     T.StructField("partition_key", T.StringType()),
@@ -106,7 +105,7 @@ def score_turns(
         F.col("__score.n_words").alias("n_words"),
         F.col("__score.repetition_ratio").alias("repetition_ratio"),
     ).drop("__score")
-    df = H.add_heuristic_columns(df, text_col, cfg, include_word_stats=False)
+    df = H.add_heuristic_columns(df, text_col, cfg)
 
     text = F.col(text_col)
     lang_ok = F.col("lang").isin(*cfg.expected_langs) & (
@@ -189,19 +188,19 @@ def read_completed_buckets(spark: SparkSession, metrics_path: str) -> list[int]:
     """Sorted ids of the buckets a previous run committed; empty on a
     fresh start.
 
-    Only a missing metrics directory counts as a fresh start.  Any other
-    read error propagates: treating it as "nothing completed" would
-    reprocess every bucket and append their metrics rows a second time.
-    The explicit schema makes a directory with no committed part files
-    (a crash during the metrics write leaves only ``_temporary/``) read
-    as empty instead of failing schema inference.  The table holds one
-    row per bucket per run, so it is collected as is (one job)."""
-    try:
-        m = spark.read.schema(METRICS_SCHEMA).parquet(metrics_path)
-    except AnalysisException as e:
-        if e.getCondition() == "PATH_NOT_FOUND":
-            return []
-        raise
+    Only a missing metrics directory counts as a fresh start, and that
+    is asked of the FileSystem, not learnt from a failed read: a read
+    that fails logs a listener ERROR once the session has run an
+    ``Observation``.  Any read error propagates: treating it as "nothing
+    completed" would reprocess every bucket and append their metrics
+    rows a second time.  The explicit schema makes a directory with no
+    committed part files (a crash during the metrics write leaves only
+    ``_temporary/``) read as empty instead of failing schema inference.
+    The table holds one row per bucket per run, so it is collected as is
+    (one job)."""
+    if not exists(spark, metrics_path):
+        return []
+    m = spark.read.schema(METRICS_SCHEMA).parquet(metrics_path)
     rows = m.filter(F.col("status") == "completed").select("partition_key").collect()
     return sorted({int(r.partition_key) for r in rows})
 

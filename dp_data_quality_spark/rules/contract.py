@@ -25,8 +25,6 @@ Contract quirks preserved deliberately (each has a golden test):
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -255,12 +253,6 @@ def normalize_column_names(df: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Datatype dispatch (validation_rulebook.py:660-687)
 # ---------------------------------------------------------------------------
-@dataclass(frozen=True)
-class DatatypeRule:
-    rule_id: int
-    factory: object  # Column -> Column, or (Column, length) -> Column
-
-
 def datatype_fail_expr(datatype: str, c: Column, length_total: int | None = None) -> Column | None:
     """Mirror of the reference dispatch table; unknown types → None (skipped,
     validation_rulebook.py:687)."""

@@ -76,13 +76,20 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return p, p.getFileSystem(spark._jsc.hadoopConfiguration())
 
 
+def exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists, asked through the Hadoop FileSystem API
+    (URI paths work; no Spark job runs)."""
+    p, fs = _hadoop_fs(spark, path)
+    return bool(fs.exists(p))
+
+
 def read_text(spark: SparkSession, path: str) -> str | None:
     """The UTF-8 file at ``path``, or ``None`` if there is none.  Goes
     through the Hadoop FileSystem API, so URI paths (s3a://, hdfs://,
     file:) work, and runs no Spark job."""
-    p, fs = _hadoop_fs(spark, path)
-    if not fs.exists(p):
+    if not exists(spark, path):
         return None
+    p, fs = _hadoop_fs(spark, path)
     stream = fs.open(p)
     try:
         return bytes(stream.readAllBytes()).decode("utf-8")

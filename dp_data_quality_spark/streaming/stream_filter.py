@@ -91,23 +91,6 @@ def start_stream_filter(
     return writer.start()
 
 
-def dedup_stream(
-    stream_df: DataFrame,
-    keys: list[str] | None = None,
-    ts_col: str = "ts",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Streaming exactly-once-per-key dedup: at-least-once sources
-    (Kafka replays, overlapping file drops) re-deliver turns; this keeps
-    the FIRST arrival of each (conv_id, turn_idx) and drops later
-    copies.  ``dropDuplicatesWithinWatermark`` bounds the dedup state to
-    the watermark horizon — the unbounded-state-free form of streaming
-    dedup (plain dropDuplicates on a stream keeps every key forever).
-    """
-    keys = keys or ["conv_id", "turn_idx"]
-    return stream_df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
-
-
 def windowed_drop_metrics(
     scored_stream: DataFrame,
     window: str = "1 minute",

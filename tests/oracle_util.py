@@ -56,7 +56,8 @@ def decide_oracle(text: str | None, cfg: FilterConfig) -> tuple[bool, list[str],
 
     n_chars = len(text)
     # word/symbol features are computed on the same bounded prefix as the
-    # engine (heuristics.add_heuristic_columns); n_chars on the full text.
+    # engine (the scorer UDF in pipeline.score_turns and
+    # heuristics.add_heuristic_columns); n_chars on the full text.
     # Word stats use the engine's byte-level contract (functions/ngram.py
     # rowwise_word_stats): ASCII-whitespace splitting, distinctness by the
     # 31-polynomial 32-bit hash — reimplemented here per row, slowly.

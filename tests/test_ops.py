@@ -467,28 +467,6 @@ def test_ann_from_text_finds_near_duplicate(spark):
     assert top[0].neighbor_id == 100 and top[0].sim > 0.8
 
 
-# --- multimodal ----------------------------------------------------------
-
-def test_multimodal_features_roundtrip(spark):
-    from dp_data_quality_spark.ops import multimodal as MM
-
-    df = spark.createDataFrame([(1, "hello"), (2, "wörld")], "doc_id long, text string")
-    out = {r.doc_id: r for r in MM.extract_features(MM.attach_binary(df)).collect()}
-    for i, text in [(1, "hello"), (2, "wörld")]:
-        b = text.encode("utf-8")
-        assert out[i].n_bytes == len(b)
-        assert out[i].sha256 == hashlib.sha256(b).hexdigest()
-        assert out[i].thumb == b[:16].hex()
-        assert out[i].format == "utf8-text"
-
-
-def test_multimodal_real_decode_stubbed():
-    from dp_data_quality_spark.ops.multimodal import decode_media
-
-    with pytest.raises(NotImplementedError):
-        decode_media("mp4", b"\x00\x00\x00\x18ftypmp42")
-
-
 # --- sources: json flatten ----------------------------------------------
 
 def test_json_flatten_nested(spark):
@@ -1436,560 +1414,6 @@ def test_write_training_shards_empty_input(spark, tmp_path):
     df = spark.createDataFrame([], "conv_id string, text string")
     manifest = write_training_shards(df, str(tmp_path / "s"), n_shards=2)
     assert manifest.count() == 0
-
-
-def test_multimodal_image_decode_real(spark):
-    """PPM/BMP/PNG payloads are decoded for REAL in the Arrow batch:
-    dims, byte size and pixel mean match the independent construction
-    formulas (PNG included — level-0 IDAT makes its size closed-form)."""
-    from dp_data_quality_spark.ops import multimodal as MM
-
-    df = spark.createDataFrame([(i,) for i in range(12)], "doc_id long")
-    feats = {
-        r.doc_id: r
-        for r in MM.extract_features(MM.synth_image_payloads(df)).collect()
-    }
-    for d in range(12):
-        r = feats[d]
-        w, h = 4 + d % 13, 3 + d % 7
-        vals = [(d * 37 + i) % 251 for i in range(w * h)]
-        assert (r.width, r.height, r.channels) == (w, h, 3)
-        assert r.format == {0: "ppm", 1: "bmp", 2: "png"}[d % 3]
-        assert abs(r.px_mean - sum(vals) / len(vals)) < 1e-9
-        if d % 3 == 0:
-            assert r.n_bytes == 9 + len(str(w)) + len(str(h)) + 3 * w * h
-        elif d % 3 == 1:
-            assert r.n_bytes == 54 + h * ((w * 3 + 3) // 4 * 4)
-        else:
-            assert r.n_bytes == 68 + h * (1 + 3 * w)
-        assert r.sha256 is None and r.thumb is None  # image rows: no thumb path
-
-
-def test_multimodal_bmp_padding_and_orientation():
-    """Decoder handles bottom-up rows and 4-byte padding: a 2x2 BMP with
-    distinct per-pixel values decodes to the exact mean, padding excluded."""
-    import struct as _s
-
-    from dp_data_quality_spark.ops.multimodal import decode_bmp
-
-    w, h = 2, 2
-    row_sz = (w * 3 + 3) // 4 * 4  # 8: two padding bytes per row
-    img_sz = row_sz * h
-    hdr = b"BM" + _s.pack("<IHHI", 54 + img_sz, 0, 0, 54)
-    hdr += _s.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, img_sz, 0, 0, 0, 0)
-    # logical pixels (top-left first): 10, 20 / 30, 40 — stored bottom-up
-    rows = [
-        bytes((30, 30, 30, 40, 40, 40)) + b"\xff\xff",  # padding NOT 0:
-        bytes((10, 10, 10, 20, 20, 20)) + b"\xff\xff",  # must be excluded
-    ]
-    gw, gh, ch, mean = decode_bmp(hdr + b"".join(rows))
-    assert (gw, gh, ch) == (2, 2, 3)
-    assert mean == 25.0
-
-
-def test_multimodal_codec_formats_still_stubbed():
-    """mp4 is the one remaining env-bound codec stub; unknown formats
-    also route to the documented extension point."""
-    from dp_data_quality_spark.ops.multimodal import decode_image
-
-    with pytest.raises(NotImplementedError):
-        decode_image("mp4", b"\x00\x00\x00\x18ftypmp42")
-
-
-def test_multimodal_jpeg_synth_roundtrip():
-    """The deterministic baseline-JPEG payloads decode bit-exactly and
-    every decoded/derived field matches its closed-form formula
-    (the DuckDB oracle's recomputation)."""
-    from dp_data_quality_spark.ops.multimodal import _synth_jpeg, decode_jpeg
-
-    for d in range(40):
-        p = _synth_jpeg(d)
-        w, h = 8 * (1 + d % 3), 8 * (1 + d % 2)
-        nb = (w // 8) * (h // 8)
-        a = 40 + d % 24
-        assert p[:2] == b"\xff\xd8" and p[-2:] == b"\xff\xd9"
-        assert len(p) == 140 + (11 * nb + 7) // 8
-        assert 0xFF not in p[138:-2]  # stuffing-free by construction
-        gw, gh, ch, mean = decode_jpeg(p)
-        assert (gw, gh, ch) == (w, h, 1)
-        assert mean == a + 96 * (nb // 2) / nb  # exact, not approximate
-
-
-def test_multimodal_jpeg_general_decode():
-    """decode_jpeg is a GENERAL baseline-grayscale decoder, not one
-    hardcoded to the synth payloads: a hand-assembled JPEG with
-    multi-category Huffman tables, nonzero AC coefficients (run-length
-    + ZRL), 0xFF00 byte stuffing, and a skipped APP0 segment decodes to
-    the pixels an independent direct-cosine IDCT predicts."""
-    import math
-    import struct as _s
-
-    import numpy as np
-
-    from dp_data_quality_spark.ops.multimodal import _ZIGZAG, decode_jpeg
-
-    w = h = 8
-    quant = [6] + [10] * 63  # zigzag order
-    # DC table: categories 0..11 at code length 4 (canonical 0000..1011)
-    dc_bits = bytes(3) + b"\x0c" + bytes(12)
-    dc_syms = bytes(range(12))
-    # AC table: EOB,0x01 at len 2 (00,01); 0x11,0xF0,0x1B at len 3
-    ac_bits = b"\x00\x02\x03" + bytes(13)
-    ac_syms = bytes([0x00, 0x01, 0x11, 0xF0, 0x1B])
-    code = {"dc": {c: format(c, "04b") for c in range(12)},
-            "EOB": "00", "0x01": "01", "0x11": "100", "0xF0": "101",
-            "0x1B": "110"}
-
-    # quantized coefficients (zigzag positions); the DC code 1011 + eleven
-    # magnitude 1-bits + the 0x11 code's leading 1 make byte 1 = 0xFF,
-    # forcing the stuffing path
-    dc_val = 2047  # category 11
-    ac = {2: 1, 4: -1, 22: -1500}  # pos 22: after ZRL, run 1, size 11 (0x1B)
-    bits = (code["dc"][11] + format(dc_val, "011b")
-            + code["0x11"] + "1"            # run 1 → pos 2: +1
-            + code["0x11"] + "0"            # run 1 → pos 4: −1 (raw bit 0)
-            + code["0xF0"]                   # ZRL: pos 5..20 zero
-            + code["0x1B"] + format(-1500 + (1 << 11) - 1, "011b")
-            + code["EOB"])
-    bits += "1" * (-len(bits) % 8)
-    raw = int(bits, 2).to_bytes(len(bits) // 8, "big")
-    assert 0xFF in raw  # the stuffing path is actually exercised
-    entropy = raw.replace(b"\xff", b"\xff\x00")
-
-    payload = (
-        b"\xff\xd8"
-        + b"\xff\xe0" + _s.pack(">H", 7) + b"JFIF\x00"  # APPn: skipped
-        + b"\xff\xdb" + _s.pack(">HB", 67, 0) + bytes(quant)
-        + b"\xff\xc0" + _s.pack(">HBHHB", 11, 8, h, w, 1) + bytes((1, 0x11, 0))
-        + b"\xff\xc4" + _s.pack(">HB", 2 + 1 + 16 + 12, 0x00) + dc_bits + dc_syms
-        + b"\xff\xc4" + _s.pack(">HB", 2 + 1 + 16 + 5, 0x10) + ac_bits + ac_syms
-        + b"\xff\xda" + _s.pack(">HB", 8, 1) + bytes((1, 0x00, 0, 63, 0))
-        + entropy + b"\xff\xd9"
-    )
-
-    # independent IDCT: direct cosine double sum over dequantized coefs
-    coef = np.zeros(64)
-    coef[0] = dc_val * quant[0]
-    for k, v in ac.items():
-        coef[_ZIGZAG[k]] = v * quant[k]
-    S = coef.reshape(8, 8)
-    c = lambda u: 1 / math.sqrt(2) if u == 0 else 1.0
-    expected = np.zeros((8, 8))
-    for y in range(8):
-        for x in range(8):
-            s = sum(
-                c(u) * c(v) * S[v, u]
-                * math.cos((2 * x + 1) * u * math.pi / 16)
-                * math.cos((2 * y + 1) * v * math.pi / 16)
-                for u in range(8) for v in range(8)
-            )
-            expected[y, x] = min(255, max(0, round(s / 4 + 128)))
-
-    gw, gh, ch, mean = decode_jpeg(payload)
-    assert (gw, gh, ch) == (8, 8, 1)
-    assert abs(mean - expected.mean()) < 1e-9
-
-
-def test_multimodal_mp4_meta_roundtrip():
-    """The deterministic MP4 container payloads parse back to their
-    closed-form fields (dims, channels from stsd depth, frame count,
-    byte size) — the DuckDB oracle's recomputation."""
-    from dp_data_quality_spark.ops.multimodal import _synth_mp4, decode_mp4_meta
-
-    for d in range(60):
-        p = _synth_mp4(d)
-        w, h, nf = 16 * (1 + d % 4), 16 * (1 + d % 3), 1 + d % 8
-        assert p[4:8] == b"ftyp"
-        assert len(p) == 587 + 36 * nf
-        assert decode_mp4_meta(p) == (w, h, 3, nf)
-
-
-def test_multimodal_mp4_general_parse():
-    """decode_mp4_meta is a GENERAL ISO BMFF box walker, not one
-    hardcoded to the synth layout: unknown boxes (free/udta) interleaved
-    at every level are skipped, a version-1 tkhd shifts the dims offset,
-    and truncated/contradictory structures raise instead of
-    mis-parsing."""
-    import struct as _s
-
-    import pytest as _pt
-
-    from dp_data_quality_spark.ops.multimodal import (
-        _box, _synth_mp4, decode_mp4_meta,
-    )
-
-    base = _synth_mp4(5)
-    # re-assemble with noise boxes injected at top level and inside moov
-    boxes = []
-    pos = 0
-    while pos < len(base):
-        (size,) = _s.unpack_from(">I", base, pos)
-        boxes.append(base[pos:pos + size])
-        pos += size
-    ftyp, moov, mdat = boxes
-    free = _box(b"free", b"\xde\xad\xbe\xef")
-    udta = _box(b"udta", _box(b"meta", bytes(8)))
-    moov_noisy = _box(b"moov", free + moov[8:] + udta)
-    noisy = ftyp + free + moov_noisy + mdat
-    assert decode_mp4_meta(noisy) == decode_mp4_meta(base) == (32, 48, 3, 6)
-
-    # version-1 tkhd: 64-bit times shift width/height by 12 bytes
-    w, h = 100, 50
-    tkhd_v1 = _box(b"tkhd", bytes([1, 0, 0, 7]) + bytes(8 + 8 + 4 + 4 + 8)
-                   + bytes(8) + bytes(8)
-                   + _s.pack(">9I", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0,
-                             0x40000000)
-                   + _s.pack(">II", w << 16, h << 16))
-    stsz = _box(b"stsz", _s.pack(">III", 0, 0, 3) + _s.pack(">III", 1, 1, 1))
-    stbl = _box(b"stbl", stsz)
-    minf = _box(b"minf", stbl)
-    mdia = _box(b"mdia", minf)
-    moov_v1 = _box(b"moov", _box(b"trak", tkhd_v1 + mdia))
-    p_v1 = _box(b"ftyp", b"isom" + bytes(8)) + moov_v1
-    assert decode_mp4_meta(p_v1) == (w, h, None, 3)  # no stsd → channels None
-
-    with _pt.raises(ValueError):
-        decode_mp4_meta(b"\x00\x00\x00\x08mdat")  # no ftyp
-    with _pt.raises(ValueError):
-        decode_mp4_meta(_box(b"ftyp", b"isom") + _box(b"moov", b""))
-    # malformed: inner box overruns its parent
-    bad = _box(b"ftyp", b"isom") + _box(
-        b"moov", _s.pack(">I", 9999) + b"trak")
-    with _pt.raises(ValueError):
-        decode_mp4_meta(bad)
-
-
-def test_multimodal_resize_nearest_exact():
-    """decode_pixels returns the true raster for all three RGB formats
-    (ppm/bmp/png agree pixel-for-pixel on the same logical image) and
-    nearest-neighbor resize samples exactly the ⌊t·src/dst⌋ grid —
-    including upsampling (target > source)."""
-    import numpy as np
-
-    from dp_data_quality_spark.ops.multimodal import (
-        _synth_image, decode_pixels, resize_nearest,
-    )
-
-    for d in range(24):
-        p, fmt = _synth_image(d)
-        w, h = 4 + d % 13, 3 + d % 7
-        gw, gh, px = decode_pixels(fmt, p)
-        assert (gw, gh) == (w, h)
-        vals = np.array([(d * 37 + i) % 251 for i in range(w * h)],
-                        dtype=np.uint8).reshape(h, w)
-        assert (px == vals[:, :, None]).all()
-        for tw, th in ((4, 4), (2, 3), (w * 2, h * 2)):
-            small = resize_nearest(px, tw, th)
-            ys = (np.arange(th) * h) // th
-            xs = (np.arange(tw) * w) // tw
-            assert (small == px[np.ix_(ys, xs)]).all()
-
-
-def test_multimodal_mp4_frame_slices_exact():
-    """Container-level frame extraction returns the exact mdat sample
-    bytes (stco offset + stsz sizes + stsc chunk mapping), and a
-    multi-chunk layout with varying sizes round-trips through the
-    general stsc expansion."""
-    import struct as _s
-
-    from dp_data_quality_spark.ops.multimodal import (
-        _box, _synth_mp4, mp4_frame_slices,
-    )
-
-    for d in range(24):
-        fr = mp4_frame_slices(_synth_mp4(d))
-        nf = 1 + d % 8
-        assert len(fr) == nf
-        for f, fb in enumerate(fr):
-            assert fb == bytes((d + f + i) % 256 for i in range(32))
-
-    # hand-built 2-chunk file: chunk 1 holds 2 samples, chunk 2 holds 1,
-    # sizes vary per sample (stsz table, not fixed-size)
-    samples = [b"AAAA", b"BBBBBB", b"CC"]
-    tkhd = _box(b"tkhd", bytes(4 + 32 + 8 + 8) + bytes(36)
-                + _s.pack(">II", 8 << 16, 8 << 16))
-    stsz = _box(b"stsz", _s.pack(">III", 0, 0, 3)
-                + b"".join(_s.pack(">I", len(x)) for x in samples))
-    stsc = _box(b"stsc", _s.pack(">I", 0) + _s.pack(">I", 2)
-                + _s.pack(">III", 1, 2, 1) + _s.pack(">III", 2, 1, 1))
-    ftyp = _box(b"ftyp", b"isom" + bytes(8))
-
-    def build(off1, off2):
-        stco = _box(b"stco", _s.pack(">I", 0) + _s.pack(">I", 2)
-                    + _s.pack(">II", off1, off2))
-        stbl = _box(b"stbl", stsz + stsc + stco)
-        return _box(b"moov", _box(b"trak", tkhd + _box(
-            b"mdia", _box(b"minf", stbl))))
-
-    moov = build(0, 0)
-    base = len(ftyp) + len(moov) + 8
-    gap = b"XX"  # chunks need not be adjacent
-    moov = build(base, base + 10 + len(gap))
-    payload = (ftyp + moov
-               + _box(b"mdat", samples[0] + samples[1] + gap + samples[2]))
-    assert mp4_frame_slices(payload) == samples
-
-
-def test_multimodal_resize_and_frame_sample_spark(spark):
-    """The Arrow-batch resize and frame-sample operators emit the
-    closed-form fields the DuckDB oracle recomputes."""
-    from dp_data_quality_spark.ops import multimodal as MM
-
-    df = spark.range(12).select(F.col("id").alias("doc_id"))
-    thumbs = {r.doc_id: r for r in MM.extract_thumbnails(
-        MM.synth_image_payloads(df), 4, 4).collect()}
-    for d in range(12):
-        r = thumbs[d]
-        w, h = 4 + d % 13, 3 + d % 7
-        idx = [((ty * h) // 4) * w + (tx * w) // 4
-               for ty in range(4) for tx in range(4)]
-        assert r.width == 4 and r.height == 4 and r.n_bytes == 48
-        assert r.px_mean == sum((d * 37 + i) % 251 for i in idx) / 16
-        assert r.format == {0: "ppm@4x4", 1: "bmp@4x4", 2: "png@4x4"}[d % 3]
-
-    frames = {r.doc_id: r for r in MM.sample_frames(
-        MM.synth_mp4_payloads(df), every=2).collect()}
-    for d in range(12):
-        r = frames[d]
-        nf = 1 + d % 8
-        ns = (nf + 1) // 2
-        assert r.n_frames == ns and r.n_bytes == 32 * ns
-        exp = sum((d + f + i) % 256
-                  for f in range(0, nf, 2) for i in range(32)) / (32 * ns)
-        assert abs(r.amp_mean - exp) < 1e-9
-
-
-def test_multimodal_mp4_frame_decode_still_stubbed():
-    """Container METADATA is hermetic, but frame decode for inter-frame
-    codecs remains the documented env-bound extension point."""
-    from dp_data_quality_spark.ops.multimodal import (
-        _synth_mp4, decode_media, decode_mp4_frames,
-    )
-
-    with pytest.raises(NotImplementedError):
-        decode_media("mp4", _synth_mp4(0))
-    # the avc1 synth refuses FRAME decode too: its mdat is not a
-    # decodable bitstream (no avcC), and the codec gate catches it
-    with pytest.raises(NotImplementedError, match="avc1"):
-        decode_mp4_frames(_synth_mp4(0))
-
-
-def test_multimodal_mjpeg_frame_decode_exact():
-    """MJPEG frame decode (container slicing × the real JPEG decoder)
-    round-trips the synth's closed forms: first-frame dims, per-frame
-    byte sizes, decoded frame count, and mean of per-frame means."""
-    from dp_data_quality_spark.ops.multimodal import (
-        _mp4_codec, _synth_mjpeg_mp4, decode_mp4_frames, decode_mp4_meta,
-        mp4_frame_slices,
-    )
-
-    for d in range(24):
-        p = _synth_mjpeg_mp4(d)
-        assert _mp4_codec(p) == b"jpeg"
-        w, h, ch, nf, mean = decode_mp4_frames(p)
-        nf_e = 1 + d % 4
-        assert (w, h, ch, nf) == (8 * (1 + d % 3), 8 * (1 + d % 2), 1, nf_e)
-        means, total = [], 0
-        for f in range(nf_e):
-            i = d + f
-            nb = (1 + i % 3) * (1 + i % 2)
-            means.append(40 + i % 24 + 96 * (nb // 2) / nb)
-            total += 140 + (11 * nb + 7) // 8
-        assert mean == pytest.approx(sum(means) / nf_e, abs=1e-12)
-        assert sum(len(fr) for fr in mp4_frame_slices(p)) == total
-        # the general container-metadata parser reads the same file
-        mw, mh, _mch, mnf = decode_mp4_meta(p)
-        assert (mw, mh, mnf) == (w, h, nf)
-
-
-def test_multimodal_mjpeg_frame_decode_spark(spark):
-    """The Arrow-batch MJPEG frame-decode operator emits the closed-form
-    fields the DuckDB oracle recomputes."""
-    from dp_data_quality_spark.ops import multimodal as MM
-
-    df = spark.range(12).select(F.col("id").alias("doc_id"))
-    rows = {r.doc_id: r for r in MM.decode_video_frames(
-        MM.synth_mjpeg_payloads(df)).collect()}
-    assert len(rows) == 12
-    for d in range(12):
-        r = rows[d]
-        nf = 1 + d % 4
-        means, total = [], 0
-        for f in range(nf):
-            i = d + f
-            nb = (1 + i % 3) * (1 + i % 2)
-            means.append(40 + i % 24 + 96 * (nb // 2) / nb)
-            total += 140 + (11 * nb + 7) // 8
-        assert r.format == "mp4-mjpeg"
-        assert (r.width, r.height, r.channels) == (
-            8 * (1 + d % 3), 8 * (1 + d % 2), 1)
-        assert r.n_frames == nf and r.n_bytes == total
-        assert r.px_mean == pytest.approx(sum(means) / nf, abs=1e-9)
-
-
-def test_multimodal_jpeg_unsupported_variants_raise():
-    """Color / progressive / restart-interval JPEG routes to the codec
-    extension point with a clear error instead of mis-decoding."""
-    import struct as _s
-
-    from dp_data_quality_spark.ops.multimodal import decode_jpeg
-
-    with pytest.raises(ValueError):
-        decode_jpeg(b"\x89PNG")
-    # progressive (SOF2)
-    sof2 = (b"\xff\xd8" + b"\xff\xc2"
-            + _s.pack(">HBHHB", 11, 8, 8, 8, 1) + bytes((1, 0x11, 0)))
-    with pytest.raises(NotImplementedError):
-        decode_jpeg(sof2)
-    # 3-component (color)
-    sof_color = (b"\xff\xd8" + b"\xff\xc0"
-                 + _s.pack(">HBHHB", 17, 8, 8, 8, 3)
-                 + bytes((1, 0x22, 0, 2, 0x11, 1, 3, 0x11, 1)))
-    with pytest.raises(NotImplementedError):
-        decode_jpeg(sof_color)
-
-
-def test_multimodal_wav_decode_real(spark):
-    """PCM WAV payloads are decoded for REAL in the Arrow batch:
-    sample rate, channel count, frame count, byte size and sample mean
-    match the independent construction formulas (mono and stereo)."""
-    from dp_data_quality_spark.ops import multimodal as MM
-
-    df = spark.createDataFrame([(i,) for i in range(10)], "doc_id long")
-    feats = {
-        r.doc_id: r
-        for r in MM.extract_features(MM.synth_audio_payloads(df)).collect()
-    }
-    for d in range(10):
-        r = feats[d]
-        nf, ch = 50 + d % 37, 1 + d % 2
-        vals = [(d * 37 + j) % 251 - 125 for j in range(nf * ch)]
-        assert r.format == "wav"
-        assert (r.sample_rate, r.channels, r.n_frames) == (8000, ch, nf)
-        assert r.n_bytes == 44 + 2 * nf * ch
-        assert abs(r.amp_mean - sum(vals) / len(vals)) < 1e-9
-        # audio rows: image and thumbnail paths stay null
-        assert r.width is None and r.height is None and r.px_mean is None
-        assert r.sha256 is None and r.thumb is None
-
-
-def test_multimodal_wav_malformed_inputs_raise():
-    import struct
-
-    from dp_data_quality_spark.ops.multimodal import _synth_wav, decode_wav
-
-    good = _synth_wav(3)
-    with pytest.raises(ValueError, match="not a RIFF"):
-        decode_wav(b"RIFX" + good[4:])
-    # non-PCM audio format (e.g. IEEE float = 3)
-    non_pcm = bytearray(good)
-    struct.pack_into("<H", non_pcm, 20, 3)
-    with pytest.raises(ValueError, match="16-bit PCM"):
-        decode_wav(bytes(non_pcm))
-    # data chunk appearing before fmt
-    with pytest.raises(ValueError, match="before fmt"):
-        decode_wav(b"RIFF" + struct.pack("<I", 8) + b"WAVE"
-                   + b"data" + struct.pack("<I", 4) + b"\x00" * 4)
-    with pytest.raises(ValueError, match="truncated WAV data"):
-        decode_wav(good[:-2])
-    # frame-misaligned data length on a stereo (block_align=4) payload
-    stereo = _synth_wav(1)
-    bad = bytearray(stereo)
-    struct.pack_into("<I", bad, 40, struct.unpack_from("<I", bad, 40)[0] - 2)
-    with pytest.raises(ValueError, match="frame-aligned"):
-        decode_wav(bytes(bad[:-2]))
-
-
-def test_multimodal_png_all_filter_types():
-    """The PNG unfilterer reverses every scanline filter type (None,
-    Sub, Up, Average, Paeth), multi-chunk IDAT included — a decoder that
-    only handled filter 0 would pass the synth round-trip but fail on
-    real encoder output."""
-    import struct as _s
-    import zlib
-
-    from dp_data_quality_spark.ops.multimodal import _paeth, decode_png
-
-    def chunk(ctype, data):
-        return (
-            _s.pack(">I", len(data)) + ctype + data
-            + _s.pack(">I", zlib.crc32(ctype + data))
-        )
-
-    w, h = 3, 5
-    px = [[(17 * (y * w + x) + 5) % 256 for x in range(w * 3)] for y in range(h)]
-
-    # filter each row with a different type, like a real adaptive encoder
-    raw = bytearray()
-    prev = [0] * (w * 3)
-    for y, ft in enumerate([0, 1, 2, 3, 4]):
-        line = px[y]
-        enc = []
-        for i in range(w * 3):
-            a = line[i - 3] if i >= 3 else 0
-            b = prev[i]
-            c = prev[i - 3] if i >= 3 else 0
-            pred = {0: 0, 1: a, 2: b, 3: (a + b) // 2, 4: _paeth(a, b, c)}[ft]
-            enc.append((line[i] - pred) & 0xFF)
-        raw.append(ft)
-        raw.extend(enc)
-        prev = line
-    ihdr = _s.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    z = zlib.compress(bytes(raw), 6)
-    mid = len(z) // 2  # split IDAT across two chunks
-    payload = (
-        b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", z[:mid]) + chunk(b"IDAT", z[mid:])
-        + chunk(b"IEND", b"")
-    )
-    gw, gh, ch, mean = decode_png(payload)
-    flat = [v for row in px for v in row]
-    assert (gw, gh, ch) == (w, h, 3)
-    assert abs(mean - sum(flat) / len(flat)) < 1e-12
-
-
-def test_multimodal_png_unsupported_variants_raise():
-    import struct as _s
-    import zlib
-
-    from dp_data_quality_spark.ops.multimodal import decode_png
-
-    def chunk(ctype, data):
-        return (
-            _s.pack(">I", len(data)) + ctype + data
-            + _s.pack(">I", zlib.crc32(ctype + data))
-        )
-
-    with pytest.raises(ValueError, match="not a PNG"):
-        decode_png(b"GIF89a")
-    pal = b"\x89PNG\r\n\x1a\n" + chunk(
-        b"IHDR", _s.pack(">IIBBBBB", 2, 2, 8, 3, 0, 0, 0)
-    )
-    with pytest.raises(ValueError, match="truecolor"):
-        decode_png(pal)
-    interlaced = b"\x89PNG\r\n\x1a\n" + chunk(
-        b"IHDR", _s.pack(">IIBBBBB", 2, 2, 8, 2, 0, 0, 1)
-    )
-    with pytest.raises(ValueError, match="interlaced"):
-        decode_png(interlaced)
-
-
-def test_multimodal_ppm_header_whitespace_verified():
-    """decode_ppm consumes exactly one verified whitespace byte after
-    maxval — a malformed header fails loudly instead of shifting the
-    raster by a byte."""
-    from dp_data_quality_spark.ops.multimodal import decode_ppm
-
-    good = b"P6\n2 1\n255\n" + bytes(6)
-    assert decode_ppm(good) == (2, 1, 3, 0.0)
-    # header that ENDS at the maxval token: no whitespace byte to
-    # consume — must raise the header error, not mis-slice the raster
-    with pytest.raises(ValueError, match="whitespace"):
-        decode_ppm(b"P6\n2 1\n255")
-    # \r\n after maxval: the single \r is consumed per spec; the \n
-    # shifts into the raster and the byte count catches the deficit
-    with pytest.raises(ValueError, match="truncated"):
-        decode_ppm(b"P6\n2 1\n255\r\n" + bytes(4))
 
 
 def test_duplicated_spans_matches_reference_and_twin(spark):

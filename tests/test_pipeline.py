@@ -287,6 +287,20 @@ def test_unreadable_metrics_raise_instead_of_restarting(spark, transcripts, tmp_
     assert not (out / "scored").exists()
 
 
+def test_missing_metrics_read_as_fresh_start_without_a_spark_read(spark, tmp_path, monkeypatch):
+    """A missing metrics directory is found with the FileSystem, not by
+    a ``spark.read`` expected to fail: once a session has run an
+    ``Observation``, that failed read logs a listener ERROR on every
+    later fresh run."""
+    from pyspark.sql import SparkSession
+
+    def no_read(self):
+        raise AssertionError("read_completed_buckets read a missing path")
+
+    monkeypatch.setattr(SparkSession, "read", property(no_read))
+    assert read_completed_buckets(spark, str(tmp_path / "missing")) == []
+
+
 def test_rerun_with_other_n_buckets_raises(spark, transcripts, tmp_path):
     """Resuming a 4-bucket output with 8 buckets would skip buckets 0-3
     and write the turns that now hash to buckets 4-7 a second time.  The

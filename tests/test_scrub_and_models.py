@@ -8,11 +8,11 @@ from pyspark.sql import functions as F
 
 from dp_data_quality_spark.config import FilterConfig
 from dp_data_quality_spark.functions.langid import _TABLE as LT
-from dp_data_quality_spark.functions.langid import make_langid_udf, score_batch
+from dp_data_quality_spark.functions.langid import score_batch
 from dp_data_quality_spark.functions.perplexity import (
     PPL_UNSCORABLE,
     _TABLE as PT,
-    make_ppl_udf,
+    make_scorer_udf,
     ppl_batch,
 )
 from dp_data_quality_spark.functions.scrub import scrub_text
@@ -82,10 +82,9 @@ def test_udfs_run_in_spark(spark):
     df = spark.createDataFrame(
         [("the quick brown fox jumps over the lazy dog",), (None,)], ["text"]
     )
-    lang_udf = make_langid_udf(spark)
-    ppl_udf = make_ppl_udf(spark)
-    rows = df.select(
-        lang_udf("text").alias("l"), ppl_udf("text").alias("p")
-    ).collect()
-    assert rows[0].l.lang == "en" and rows[0].p < PPL_UNSCORABLE
-    assert rows[1].l.lang == "und" and rows[1].p == PPL_UNSCORABLE
+    scorer = make_scorer_udf(spark)
+    rows = [r.s for r in df.select(scorer("text").alias("s")).collect()]
+    assert rows[0].lang == "en" and rows[0].ppl < PPL_UNSCORABLE
+    assert rows[0].n_words == 9
+    assert rows[1].lang == "und" and rows[1].ppl == PPL_UNSCORABLE
+    assert rows[1].n_words == 0

@@ -132,45 +132,6 @@ def test_replayed_micro_batch_is_idempotent(spark, staged_input, tmp_path):
     assert {r.run_id for r in written.select("run_id").distinct().collect()} == {"stream-7"}
 
 
-def test_dedup_stream_drops_redelivered_turns(spark, tmp_path):
-    # at-least-once redelivery: the same (conv_id, turn_idx) arrives in
-    # two micro-batches; dropDuplicatesWithinWatermark keeps the first.
-    import datetime as dt
-
-    from dp_data_quality_spark.streaming.stream_filter import dedup_stream
-
-    t0 = dt.datetime(2026, 1, 1, 12, 0, 0)
-    schema = "conv_id string, turn_idx int, text string, ts timestamp"
-    inp = str(tmp_path / "inp")
-    spark.createDataFrame(
-        [("c1", 0, "hello", t0), ("c1", 1, "world", t0)], schema
-    ).write.mode("append").parquet(inp)
-    spark.createDataFrame(  # replay of c1/0 + one new turn
-        [("c1", 0, "hello", t0), ("c2", 0, "hey", t0)], schema
-    ).write.mode("append").parquet(inp)
-
-    stream = spark.readStream.schema(
-        spark.read.parquet(inp).schema
-    ).option("maxFilesPerTrigger", 1).parquet(inp)
-    deduped = dedup_stream(stream, watermark="10 minutes")
-
-    out = str(tmp_path / "out")
-    q = (
-        deduped.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = spark.read.parquet(out).collect()
-    got = sorted((r.conv_id, r.turn_idx) for r in rows)
-    assert got == [("c1", 0), ("c1", 1), ("c2", 0)]  # no duplicate c1/0
-
-
 def test_windowed_metrics_drop_late_rows_beyond_watermark(spark, tmp_path):
     # a row arriving after the watermark passed its window must NOT be
     # counted in that window's metrics (the documented trade-off: late
