@@ -10,7 +10,7 @@ Scoring runs inside the fused scorer UDF (``perplexity.make_scorer_udf``):
 texts are NUL-concatenated into one byte buffer (``ngram.encode_batch``,
 a per-row Python loop), then bucket gathers and ``np.add.reduceat``
 produce per-row per-language log-likelihoods with no per-row Python.
-The (65536 × L) float32 table is shipped to executors once via
+The (L × 65536) table is shipped to executors once via
 ``SparkContext.broadcast``.
 """
 
@@ -43,9 +43,10 @@ def _train_table() -> np.ndarray:
     return table.astype(np.float32)
 
 
-# Stored bucket-first (N_BUCKETS, n_langs): the scoring gather is then a
-# single contiguous fancy-index (see ngram.rowwise_ngram_stats).
-_TABLE = np.ascontiguousarray(_train_table().T)
+# The float32-rounded log-probabilities, stored as float64: the scorer
+# gathers each language's row and sums it in float64 with no cast (see
+# ngram.rowwise_ngram_stats).
+_TABLE = _train_table().astype(np.float64)
 
 
 def score_batch(texts: pd.Series, table: np.ndarray) -> pd.DataFrame:

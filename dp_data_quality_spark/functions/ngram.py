@@ -131,47 +131,48 @@ def rowwise_ngram_stats(
     """For each row segment of ``buf``: (sum of table[bucket] over the row's
     n-grams, count of valid n-grams).
 
-    ``logprob_table`` may be 1-D (n_buckets,) or 2-D **bucket-first**
-    (n_buckets, n_langs); sums come back shaped (rows,) or
-    (rows, n_langs).  Bucket-first means the multi-language gather is a
-    single contiguous-row fancy-index — one (W, L) C-ordered copy —
-    instead of L strided gathers.  N-grams containing the NUL separator
-    contribute zero (masked in place on the fresh gather).
+    ``logprob_table`` may be 1-D (n_buckets,) or 2-D **language-first**
+    (n_langs, n_buckets); sums come back shaped (rows,) or
+    (rows, n_langs).  Each language is gathered on its own: a
+    contiguous fancy-index into one table row, which stays in cache.
+    N-grams containing the NUL separator contribute zero (masked in
+    place on each fresh gather).
+
+    Sums accumulate in float64 whatever the table's dtype, so a row's
+    result does not depend on the other rows in its batch: a float32
+    ``reduceat`` rounds differently with the row's position in the
+    buffer.  A float64 sum of float32 entries is exact, hence the same
+    in any order, while it stays below 2^53 ulps of the smallest entry;
+    for the hermetic tables (entries in [-11.4, -5.2], ulp ≥ 2^-21) that
+    is any row under about 10^8 n-grams.  One float64 column at a time
+    keeps the peak at one (W,) float64 array, not a (W, n_langs) one.
     """
+    table = np.atleast_2d(logprob_table)
+    rows = len(offsets)
     idx = hash_ngrams(buf, n)
     if idx.size == 0:
-        rows = len(offsets)
-        if logprob_table.ndim == 1:
-            return np.zeros(rows), np.zeros(rows, dtype=np.int64)
-        return np.zeros((rows, logprob_table.shape[1])), np.zeros(rows, dtype=np.int64)
-
-    valid = _valid_windows(buf, n)
-
-    # reduceat boundaries in window space (window i starts at byte i);
-    # boundaries must stay < idx.size, rows past the end are zeroed below.
-    starts = np.minimum(offsets, idx.size - 1)
-    counts = np.add.reduceat(valid.astype(np.int64), starts)
-    invalid = ~valid
-    if logprob_table.ndim == 1:
-        contrib = logprob_table[idx].astype(np.float64, copy=True)
-        contrib[invalid] = 0.0
-        sums = np.add.reduceat(contrib, starts)
+        sums, counts = np.zeros((rows, len(table))), np.zeros(rows, dtype=np.int64)
     else:
-        gathered = logprob_table[idx]                 # (W, L), C-contiguous
-        gathered[invalid] = 0.0                       # in place on the copy
-        sums = np.add.reduceat(gathered, starts, axis=0)  # (rows, L)
+        valid = _valid_windows(buf, n)
+        invalid = ~valid
+        # reduceat boundaries in window space (window i starts at byte i);
+        # boundaries must stay < idx.size, rows past the end are zeroed below.
+        starts = np.minimum(offsets, idx.size - 1)
+        counts = np.add.reduceat(valid.astype(np.int64), starts)
+        sums = np.empty((rows, len(table)))
+        for j, lang_row in enumerate(table):
+            contrib = lang_row[idx].astype(np.float64, copy=False)
+            contrib[invalid] = 0.0                    # in place on the fresh gather
+            sums[:, j] = np.add.reduceat(contrib, starts)
 
-    # np.add.reduceat quirk: for an empty segment (equal consecutive
-    # boundaries) it returns the single element at the boundary instead of
-    # 0 — zero those rows explicitly.
-    seg_ends = np.append(starts[1:], idx.size)
-    empty = (seg_ends <= starts) | (offsets >= idx.size)
-    counts[empty] = 0
-    if logprob_table.ndim == 1:
+        # np.add.reduceat quirk: for an empty segment (equal consecutive
+        # boundaries) it returns the single element at the boundary instead
+        # of 0 — zero those rows explicitly.
+        seg_ends = np.append(starts[1:], idx.size)
+        empty = (seg_ends <= starts) | (offsets >= idx.size)
+        counts[empty] = 0
         sums[empty] = 0.0
-    else:
-        sums[empty, :] = 0.0
-    return sums, counts
+    return (sums[:, 0] if logprob_table.ndim == 1 else sums), counts
 
 
 def _valid_windows(buf: np.ndarray, n: int) -> np.ndarray:

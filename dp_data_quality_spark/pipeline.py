@@ -8,11 +8,13 @@ jobs, quality_report.py:143-145,265-271).
 
 Scale design:
 - conversations are hash-bucketed (``pmod(xxhash64(conv_id), n_buckets)``)
-  — the resume/commit unit and the write partition; scoring itself is
-  narrow (no shuffle), so mega-thread skew only bounds local sort work.
-- stable output ordering via ``sortWithinPartitions(conv_id, turn_idx)``
-  — deterministic files, no global window (the reference's single-task
-  ROW_ID shuffle, validation_rulebook.py:102-103, is gone).
+  — the resume/commit unit and the write partition.  One repartition by
+  bucket before scoring gives each bucket one task, so each
+  ``(keep, bucket)`` directory gets one file whose rows are a pure
+  function of the input; their order within the file is not (it follows
+  shuffle fetch order), and no reader needs it: turns are keyed by
+  ``(conv_id, turn_idx)``, with no global window (the reference's
+  single-task ROW_ID shuffle, validation_rulebook.py:102-103, is gone).
 - checkpoint-resume: each completed bucket appends a lineage row to the
   metrics table; a rerun filters completed buckets out of the input, and
   dynamic partition overwrite keeps data writes idempotent if a run dies
@@ -124,6 +126,29 @@ def score_turns(
     scrubbed = scrub_text(text, cfg.toxicity_lexicon if cfg.scrub_pii else ())
     df = df.withColumn("scrubbed_text", F.when(F.col("keep"), scrubbed))
     return df
+
+
+def write_scored(scored: DataFrame, path: str, run_id: str | None = None) -> None:
+    """Write ``OUTPUT_COLUMNS`` of ``scored`` to ``path`` partitioned by
+    (keep, bucket), under a ``run_id=...`` level when ``run_id`` is given:
+    the one sink of the batch (``run_pipeline``) and stream
+    (``streaming.stream_filter.filtered_writer``) paths.
+
+    Dynamic overwrite replaces only the partitions this write holds, so
+    rewriting a bucket after a crash, or replaying a micro-batch, is
+    idempotent.  Each task writes one file per directory it holds rows
+    for; callers route rows so that one task holds each bucket."""
+    out = scored.selectExpr(*OUTPUT_COLUMNS)
+    parts = ["keep", "bucket"]
+    if run_id is not None:
+        out = out.withColumn("run_id", F.lit(run_id))
+        parts.insert(0, "run_id")
+    (
+        out.write.partitionBy(*parts)
+        .option("partitionOverwriteMode", "dynamic")
+        .mode("overwrite")
+        .parquet(path)
+    )
 
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -253,7 +278,7 @@ def run_pipeline(
       directory to start over.
     - ``{output_dir}/scored``  — ONE pass, partitioned by (keep, bucket):
       ``keep=1`` subtree = kept turns with scrubbed_text (the filtered
-      table, sorted by (conv_id, turn_idx) within files); ``keep=0``
+      table, one file per bucket, rows in no set order); ``keep=0``
       subtree = per-row drop lineage (keys + reasons, no text payload).
     - ``{output_dir}/metrics`` — one lineage row per completed bucket,
       aggregated from the already-written columnar output (a pruned
@@ -322,16 +347,7 @@ def run_pipeline(
             "scrubbed_text", F.when(F.col("keep"), F.col("scrubbed_text"))
         )
 
-    # dynamic overwrite replaces only the (keep, bucket) partitions this
-    # run writes, so rewriting a bucket after a crash is idempotent.
-    (
-        scored.selectExpr(*OUTPUT_COLUMNS)
-        .sortWithinPartitions("conv_id", "turn_idx")
-        .write.partitionBy("keep", "bucket")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .parquet(scored_path)
-    )
+    write_scored(scored, scored_path)
 
     # lineage metrics from the committed files, in one pruned scan of
     # (keep, bucket, drop_reasons): posexplode_outer yields one row per

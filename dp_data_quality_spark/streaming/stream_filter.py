@@ -9,9 +9,12 @@ keep/drop contract identical across both.
 Design:
 - ``score_stream``: stateless scoring — pure projection, so it attaches
   to any streaming DataFrame with no state store and no shuffle.
-- ``filtered_writer``: ``foreachBatch`` sink reusing the batch
-  pipeline's partitioned-write layout (keep/bucket), prefixed with a
-  per-epoch ``run_id=stream-{batch_id}`` partition.  Each micro-batch
+- ``filtered_writer``: ``foreachBatch`` sink writing through the batch
+  pipeline's sink (``pipeline.write_scored``): the (keep, bucket) layout,
+  prefixed with a per-epoch ``run_id=stream-{batch_id}`` partition.  The
+  scored micro-batch is repartitioned by bucket before the write, so
+  each directory gets one part file per epoch however many input
+  splits fed it; scoring still runs on the input splits.  Each micro-batch
   DYNAMICALLY OVERWRITES its own run_id partitions, so a replayed
   epoch (failure after write, before checkpoint commit) rewrites the
   same partitions instead of appending duplicates — exactly-once per
@@ -28,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import FilterConfig
-from ..pipeline import OUTPUT_COLUMNS, score_turns, with_bucket
+from ..pipeline import score_turns, with_bucket, write_scored
 
 
 def score_stream(
@@ -48,7 +51,9 @@ def score_stream(
 def filtered_writer(output_dir: str):
     """``foreachBatch`` function writing each scored micro-batch under a
     ``run_id=stream-{batch_id}`` partition in the batch pipeline's
-    (keep, bucket) layout.
+    (keep, bucket) layout, one part file per directory: a shuffle routes
+    each bucket to one write task (with AQE on, 2 Spark jobs per
+    micro-batch: the shuffle stage runs as its own job).
 
     Idempotent replay: ``overwrite`` + dynamic partitionOverwriteMode
     only replaces the partitions PRESENT in this batch — i.e. exactly
@@ -58,13 +63,8 @@ def filtered_writer(output_dir: str):
     exactly-once per epoch."""
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.selectExpr(*OUTPUT_COLUMNS)
-            .withColumn("run_id", F.lit(f"stream-{batch_id}"))
-            .write.partitionBy("run_id", "keep", "bucket")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(f"{output_dir}/scored")
+        write_scored(
+            batch_df.repartition("bucket"), f"{output_dir}/scored", f"stream-{batch_id}"
         )
 
     return _write

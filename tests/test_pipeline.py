@@ -1,10 +1,12 @@
 """End-to-end pipeline tests: golden-label fidelity vs the pure-Python
 oracle (keep/drop F1 and byte-identical scrub), synthesis determinism,
-checkpoint-resume, and stable output ordering under input perturbation.
+checkpoint-resume, output stability under input perturbation, and the
+sink's job counts and write plan.
 """
 
 from __future__ import annotations
 
+import re
 import shutil
 
 import pandas as pd
@@ -23,7 +25,9 @@ from dp_data_quality_spark.pipeline import (
     score_turns,
     with_bucket,
 )
+from dp_data_quality_spark.streaming.stream_filter import filtered_writer, score_stream
 
+from .conftest import executed_plans, in_job_group
 from .oracle_util import decide_oracle, f1
 
 CFG = FilterConfig()
@@ -34,18 +38,6 @@ SEED = 42
 @pytest.fixture(scope="module")
 def transcripts(spark):
     return synth.strip_truth(synth.transcripts(spark, N_CONVS, seed=SEED)).cache()
-
-
-def in_job_group(spark, group, fn):
-    """Run ``fn()`` under job group ``group``; return its result and the
-    ids of the Spark jobs it ran."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, sc.statusTracker().getJobIdsForGroup(group)
 
 
 def files_under(root):
@@ -157,7 +149,8 @@ def test_stable_ordering_under_input_shuffle(spark, transcripts, tmp_path):
     shuffled = transcripts.orderBy(F.rand(seed=1)).repartition(7)
     out_a = str(tmp_path / "a")
     out_b = str(tmp_path / "b")
-    run_pipeline(spark, transcripts, out_a, cfg=CFG, n_buckets=4, run_id="ra")
+    in_job_group(spark, "order-a", lambda: run_pipeline(
+        spark, transcripts, out_a, cfg=CFG, n_buckets=4, run_id="ra"))
     run_pipeline(spark, shuffled, out_b, cfg=CFG, n_buckets=4, run_id="rb")
 
     a = spark.read.parquet(out_a + "/scored/keep=1")
@@ -166,9 +159,16 @@ def test_stable_ordering_under_input_shuffle(spark, transcripts, tmp_path):
     pa = a.select(cols).orderBy("conv_id", "turn_idx").toPandas()
     pb = b.select(cols).orderBy("conv_id", "turn_idx").toPandas()
     pd.testing.assert_frame_equal(pa, pb)
-    # within each bucket file set, rows are already (conv_id, turn_idx) sorted
-    one = a.filter("bucket = 0").select("conv_id", "turn_idx").toPandas()
-    assert list(one.itertuples(index=False)) == sorted(one.itertuples(index=False))
+    # the scored write's one Sort is the writer's own, on the partition
+    # columns: rows within a file are in no promised order.  Its one
+    # Exchange is the repartition before scoring: the write adds none.
+    (write,) = [p for p in executed_plans(spark, "order-a")
+                if any(name == "ArrowEvalPython" for name, _ in p)]
+    sorts = [args for name, args in write if name == "Sort"]
+    assert len(sorts) == 1, write
+    assert re.fullmatch(r"\[keep#\d+ ASC NULLS FIRST, bucket#\d+ ASC NULLS FIRST\], false, 0",
+                        sorts[0]), sorts
+    assert [name for name, _ in write].count("Exchange") == 1, write
 
 
 def test_skew_mega_thread_completes(spark, tmp_path):
@@ -260,6 +260,15 @@ def test_run_pipeline_leaves_session_conf_unchanged(spark, transcripts, tmp_path
     # every other stage (input scan, metrics scan and aggregates) has at
     # most 4 tasks here, so the widest stage is the scoring stage
     assert max(tasks) == n_buckets, tasks
+
+
+def test_filtered_writer_runs_two_jobs(spark, transcripts, tmp_path):
+    """A stream micro-batch write is 2 Spark jobs: the scoring stage up
+    to the shuffle that routes each bucket to one task, then the write."""
+    write = filtered_writer(str(tmp_path / "out"))
+    batch = score_stream(transcripts, spark, CFG, n_buckets=8)
+    _, jobs = in_job_group(spark, "stream-write", lambda: write(batch, 0))
+    assert len(jobs) == 2, jobs
 
 
 def test_resume_after_crash_in_metrics_write_starts_fresh(spark, transcripts, tmp_path):

@@ -132,6 +132,28 @@ def test_replayed_micro_batch_is_idempotent(spark, staged_input, tmp_path):
     assert {r.run_id for r in written.select("run_id").distinct().collect()} == {"stream-7"}
 
 
+def test_micro_batch_commits_one_file_per_bucket_directory(spark, tmp_path):
+    # a micro-batch read from several input splits is routed by bucket
+    # before the write, so each (run_id, keep, bucket) directory gets one
+    # part file, not one per split
+    from dp_data_quality_spark.streaming.stream_filter import filtered_writer
+
+    inp = str(tmp_path / "inp")
+    synth.strip_truth(synth.transcripts(spark, 60, seed=5)).repartition(3).write.parquet(inp)
+    batch = spark.read.parquet(inp)
+    assert batch.rdd.getNumPartitions() >= 2
+    out = tmp_path / "out"
+    filtered_writer(str(out))(score_stream(batch, spark, CFG, 4), 2)
+
+    parts = {}
+    for f in (out / "scored").rglob("part-*"):
+        key = str(f.parent.relative_to(out / "scored"))
+        parts[key] = parts.get(key, 0) + 1
+    assert len(parts) == 8, parts  # run_id=stream-2 × keep 0/1 × 4 buckets
+    assert set(parts.values()) == {1}, parts
+    assert spark.read.parquet(str(out / "scored")).count() == batch.count()
+
+
 def test_windowed_metrics_drop_late_rows_beyond_watermark(spark, tmp_path):
     # a row arriving after the watermark passed its window must NOT be
     # counted in that window's metrics (the documented trade-off: late
