@@ -18,7 +18,7 @@ Public modules
 - ``functions.scrub``    — PII / toxicity scrubbing (JVM regexp_replace chain)
 - ``functions.langid``   — broadcast char-n-gram language ID (Arrow pandas UDF)
 - ``functions.perplexity`` — broadcast byte-n-gram LM perplexity (Arrow pandas UDF)
-- ``functions.heuristics`` — vectorized quality heuristics (pure Column exprs)
+- ``functions.heuristics`` — vectorized quality heuristics (SQL expressions)
 - ``sources``            — format-sniffed readers + recursive JSON flatten
 - ``synth``              — deterministic distributed transcript synthesis
 

@@ -1,7 +1,7 @@
 """End-to-end quality-filter pipeline over transcript tables.
 
 One wide ``select`` computes EVERYTHING per turn — contract-derived
-checks, heuristics (pure Column exprs), langid + perplexity (one fused
+checks, heuristics (SQL expressions), langid + perplexity (one fused
 Arrow pandas UDF, one text transfer), scrubbed text, drop reasons — so
 the source is scanned exactly once (vs the reference's O(columns×rules)
 jobs, quality_report.py:143-145,265-271).
@@ -44,7 +44,8 @@ from pyspark.sql import types as T
 from .config import FilterConfig
 from .functions import heuristics as H
 from .functions.perplexity import make_scorer_udf
-from .functions.scrub import scrub_text
+from .functions.scrub import scrub_sql
+from .functions.sqltext import ident, number, string
 from .session import exists, read_text, write_text
 
 METRICS_SCHEMA = T.StructType([
@@ -64,9 +65,10 @@ LANG_REASON = "lang_mismatch"
 PPL_REASON = "high_perplexity"
 ROLLUP_REASON = "conv_low_keep_frac"
 
-# Sink layout shared by the batch (run_pipeline) and stream
-# (streaming.stream_filter.filtered_writer) writers.  keep is stored as
-# int so the partition column's type survives a re-read.
+# Columns of the sink shared by the batch (run_pipeline) and stream
+# (streaming.stream_filter.filtered_writer) writers; write_scored picks
+# the partition columns of each.  keep is stored as int so the
+# partition column's type survives a re-read.
 OUTPUT_COLUMNS = [
     "CAST(keep AS INT) AS keep",
     "bucket", "conv_id", "turn_idx", "role", "tool", "ts",
@@ -86,63 +88,70 @@ def score_turns(
     """Add lang, lang_conf, ppl, heuristic columns, drop_reasons, keep and
     scrubbed_text in a single pass.  ``ppl_table`` swaps the hermetic
     import-time perplexity model for a corpus-trained one (numpy array
-    from ``functions.perplexity.train_table_distributed``)."""
+    from ``functions.perplexity.train_table_distributed``).
+
+    Every column after the scorer UDF is planned from SQL text rendered
+    from ``cfg``: a few ``selectExpr`` calls instead of a py4j call per
+    Column node, which made driver planning a fixed cost of each
+    micro-batch."""
     cfg = cfg or FilterConfig()
     scorer = make_scorer_udf(spark, ppl_table=ppl_table)
+    t = ident(text_col)
+    columns = [ident(c) for c in df.columns]
 
     # UDF first, heuristics second: every non-UDF column is buffered
     # JVM-side while batches round-trip through Python, so the Arrow
     # stage should see the narrowest possible row (original columns
     # only, none of the derived heuristic columns).
-    score_input = (
-        F.substring(F.col(text_col), 1, cfg.score_prefix_chars)
-        if cfg.score_prefix_chars
-        else F.col(text_col)
+    df = df.withColumn("__score", scorer(F.expr(H.scored_prefix(t, cfg)))).selectExpr(
+        *columns,
+        *(f"__score.{f} AS {f}"
+          for f in ("lang", "lang_conf", "ppl", "n_words", "repetition_ratio")),
+        *H.heuristic_columns(t, cfg),
     )
-    df = df.withColumn("__score", scorer(score_input)).select(
-        "*",
-        F.col("__score.lang").alias("lang"),
-        F.col("__score.lang_conf").alias("lang_conf"),
-        F.col("__score.ppl").alias("ppl"),
-        F.col("__score.n_words").alias("n_words"),
-        F.col("__score.repetition_ratio").alias("repetition_ratio"),
-    ).drop("__score")
-    df = H.add_heuristic_columns(df, text_col, cfg)
 
-    text = F.col(text_col)
-    lang_ok = F.col("lang").isin(*cfg.expected_langs) & (
-        F.col("lang_conf") >= cfg.lang_conf_min
-    )
-    reason_exprs = [
-        F.when(text.isNull(), F.lit(NULL_REASON)),
-        F.when(text.isNotNull() & ~lang_ok, F.lit(LANG_REASON)),
-        F.when(text.isNotNull() & (F.col("ppl") > cfg.ppl_max), F.lit(PPL_REASON)),
+    lang_ok = (
+        f"lang IN ({', '.join(string(x) for x in cfg.expected_langs)})"
+        if cfg.expected_langs else "FALSE"
+    ) + f" AND lang_conf >= {number(cfg.lang_conf_min)}"
+    fails = [
+        (LANG_REASON, f"NOT ({lang_ok})"),
+        (PPL_REASON, f"ppl > {number(cfg.ppl_max)}"),
+        *H.heuristic_drop_reasons(cfg),
     ]
-    for reason, fail in H.heuristic_drop_reasons(cfg):
-        reason_exprs.append(F.when(text.isNotNull() & fail, F.lit(reason)))
-
-    df = df.withColumn("drop_reasons", F.array_compact(F.array(*reason_exprs)))
-    df = df.withColumn("keep", F.size("drop_reasons") == 0)
-    scrubbed = scrub_text(text, cfg.toxicity_lexicon if cfg.scrub_pii else ())
-    df = df.withColumn("scrubbed_text", F.when(F.col("keep"), scrubbed))
-    return df
+    reasons = [f"CASE WHEN {t} IS NULL THEN {string(NULL_REASON)} END"] + [
+        f"CASE WHEN {t} IS NOT NULL AND ({fail}) THEN {string(reason)} END"
+        for reason, fail in fails
+    ]
+    scrubbed = scrub_sql(t, cfg.toxicity_lexicon, pii=cfg.scrub_pii)
+    return (
+        df.selectExpr("*", f"array_compact(array({', '.join(reasons)})) AS drop_reasons")
+        .selectExpr("*", "size(drop_reasons) = 0 AS keep")
+        .selectExpr("*", f"CASE WHEN keep THEN {scrubbed} END AS scrubbed_text")
+    )
 
 
 def write_scored(scored: DataFrame, path: str, run_id: str | None = None) -> None:
-    """Write ``OUTPUT_COLUMNS`` of ``scored`` to ``path`` partitioned by
-    (keep, bucket), under a ``run_id=...`` level when ``run_id`` is given:
-    the one sink of the batch (``run_pipeline``) and stream
+    """Write ``OUTPUT_COLUMNS`` of ``scored`` to ``path``: the one sink of
+    the batch (``run_pipeline``) and stream
     (``streaming.stream_filter.filtered_writer``) paths.
+
+    Each path partitions by its commit unit.  A batch write (no
+    ``run_id``) is partitioned by (keep, bucket): the bucket is what a
+    resume skips or rewrites.  A stream write is partitioned by
+    (run_id, keep) with ``run_id`` given, and keeps ``bucket`` as a data
+    column: a micro-batch commits as one epoch, whatever its buckets.
 
     Dynamic overwrite replaces only the partitions this write holds, so
     rewriting a bucket after a crash, or replaying a micro-batch, is
     idempotent.  Each task writes one file per directory it holds rows
-    for; callers route rows so that one task holds each bucket."""
-    out = scored.selectExpr(*OUTPUT_COLUMNS)
-    parts = ["keep", "bucket"]
-    if run_id is not None:
-        out = out.withColumn("run_id", F.lit(run_id))
-        parts.insert(0, "run_id")
+    for: the batch path routes each bucket to one task, and a stream
+    micro-batch writes one file per input split and keep value."""
+    if run_id is None:
+        out, parts = scored.selectExpr(*OUTPUT_COLUMNS), ["keep", "bucket"]
+    else:
+        out = scored.selectExpr(*OUTPUT_COLUMNS, f"{string(run_id)} AS run_id")
+        parts = ["run_id", "keep"]
     (
         out.write.partitionBy(*parts)
         .option("partitionOverwriteMode", "dynamic")

@@ -83,6 +83,13 @@ def exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(p))
 
 
+def glob(spark: SparkSession, pattern: str) -> list[str]:
+    """The paths matching the Hadoop glob ``pattern``, asked through the
+    Hadoop FileSystem API (no Spark job runs)."""
+    p, fs = _hadoop_fs(spark, pattern)
+    return [str(s.getPath().toString()) for s in fs.globStatus(p) or []]
+
+
 def read_text(spark: SparkSession, path: str) -> str | None:
     """The UTF-8 file at ``path``, or ``None`` if there is none.  Goes
     through the Hadoop FileSystem API, so URI paths (s3a://, hdfs://,

@@ -10,16 +10,16 @@ Design:
 - ``score_stream``: stateless scoring — pure projection, so it attaches
   to any streaming DataFrame with no state store and no shuffle.
 - ``filtered_writer``: ``foreachBatch`` sink writing through the batch
-  pipeline's sink (``pipeline.write_scored``): the (keep, bucket) layout,
-  prefixed with a per-epoch ``run_id=stream-{batch_id}`` partition.  The
-  scored micro-batch is repartitioned by bucket before the write, so
-  each directory gets one part file per epoch however many input
-  splits fed it; scoring still runs on the input splits.  Each micro-batch
-  DYNAMICALLY OVERWRITES its own run_id partitions, so a replayed
-  epoch (failure after write, before checkpoint commit) rewrites the
-  same partitions instead of appending duplicates — exactly-once per
-  epoch, given the source's deterministic epoch replay (which the
-  streaming checkpoint guarantees for replayable sources).
+  pipeline's sink (``pipeline.write_scored``), partitioned by the
+  stream's commit unit: ``run_id=stream-{batch_id}/keep=0|1``, with
+  ``bucket`` kept as a data column.  A micro-batch is one Spark job with
+  no shuffle: each input split scores its rows and writes one part file
+  per keep value.  Each micro-batch DYNAMICALLY OVERWRITES its own
+  run_id partitions, so a replayed epoch (failure after write, before
+  checkpoint commit) rewrites the same partitions instead of appending
+  duplicates — exactly-once per epoch, given the source's deterministic
+  epoch replay (which the streaming checkpoint guarantees for
+  replayable sources).
 - ``windowed_drop_metrics``: watermarked per-window drop-reason counts
   — the streaming analogue of the metrics table (late turns beyond the
   watermark are dropped from metrics, never from data).
@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ..config import FilterConfig
 from ..pipeline import score_turns, with_bucket, write_scored
+from ..session import glob
 
 
 def score_stream(
@@ -49,23 +50,34 @@ def score_stream(
 
 
 def filtered_writer(output_dir: str):
-    """``foreachBatch`` function writing each scored micro-batch under a
-    ``run_id=stream-{batch_id}`` partition in the batch pipeline's
-    (keep, bucket) layout, one part file per directory: a shuffle routes
-    each bucket to one write task (with AQE on, 2 Spark jobs per
-    micro-batch: the shuffle stage runs as its own job).
+    """``foreachBatch`` function writing each scored micro-batch to
+    ``{output_dir}/scored/run_id=stream-{batch_id}/keep=0|1/``, with
+    ``bucket`` as a data column: one Spark job per micro-batch, one part
+    file per input split and keep value.
 
     Idempotent replay: ``overwrite`` + dynamic partitionOverwriteMode
     only replaces the partitions PRESENT in this batch — i.e. exactly
     this epoch's ``run_id`` subtree.  A micro-batch retried after a
     crash overwrites its own earlier (possibly partial) output instead
     of appending a second copy, which is what makes the sink
-    exactly-once per epoch."""
+    exactly-once per epoch.
+
+    Raises ``ValueError`` if ``output_dir`` holds stream output in the
+    earlier ``run_id/keep/bucket`` layout: the two layouts cannot be
+    read as one table, and the failure would only show after this
+    writer's first commit.  The check is one FileSystem glob, made
+    here, not per micro-batch."""
+    scored_path = f"{output_dir}/scored"
+    earlier = glob(SparkSession.active(), f"{scored_path}/run_id=*/keep=*/bucket=*")
+    if earlier:
+        raise ValueError(
+            f"{scored_path} holds stream output partitioned by run_id/keep/bucket "
+            f"(e.g. {earlier[0]}), which cannot be read as one table with the "
+            "run_id/keep micro-batches this writer adds: write to a new output directory"
+        )
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
-        write_scored(
-            batch_df.repartition("bucket"), f"{output_dir}/scored", f"stream-{batch_id}"
-        )
+        write_scored(batch_df, scored_path, f"stream-{batch_id}")
 
     return _write
 

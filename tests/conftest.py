@@ -4,6 +4,8 @@ tests/conftest.py:19-41 which require a live bucket)."""
 from __future__ import annotations
 
 import re
+from collections import Counter
+from pathlib import Path
 
 import pytest
 from pyspark.sql import SparkSession
@@ -68,3 +70,10 @@ def executed_plans(spark, group):
             for name, node_id in re.findall(r"([A-Z]\w*)[^(\n]*\((\d+)\)", tree)
         ])
     return plans
+
+
+def part_files(root):
+    """``{directory relative to root: number of part files in it}`` for
+    every directory under ``root`` that holds part files."""
+    root = Path(root)
+    return dict(Counter(str(f.parent.relative_to(root)) for f in root.rglob("part-*")))

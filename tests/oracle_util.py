@@ -26,11 +26,13 @@ _SCRUB = [
 ]
 
 
-def scrub_oracle(text: str | None, lexicon: tuple[str, ...]) -> str | None:
+def scrub_oracle(
+    text: str | None, lexicon: tuple[str, ...], pii: bool = True
+) -> str | None:
     if text is None:
         return None
     out = text
-    for pat, token in _SCRUB:
+    for pat, token in _SCRUB if pii else ():
         out = pat.sub(token, out)
     if lexicon:
         tox = re.compile(r"\b(" + "|".join(re.escape(w) for w in lexicon) + r")\b", re.I)
@@ -57,7 +59,7 @@ def decide_oracle(text: str | None, cfg: FilterConfig) -> tuple[bool, list[str],
     n_chars = len(text)
     # word/symbol features are computed on the same bounded prefix as the
     # engine (the scorer UDF in pipeline.score_turns and
-    # heuristics.add_heuristic_columns); n_chars on the full text.
+    # heuristics.heuristic_columns); n_chars on the full text.
     # Word stats use the engine's byte-level contract (functions/ngram.py
     # rowwise_word_stats): ASCII-whitespace splitting, distinctness by the
     # 31-polynomial 32-bit hash — reimplemented here per row, slowly.
@@ -102,7 +104,7 @@ def decide_oracle(text: str | None, cfg: FilterConfig) -> tuple[bool, list[str],
         reasons.append("boilerplate")
 
     keep = not reasons
-    scrubbed = scrub_oracle(text, cfg.toxicity_lexicon) if keep else None
+    scrubbed = scrub_oracle(text, cfg.toxicity_lexicon, cfg.scrub_pii) if keep else None
     return keep, reasons, scrubbed
 
 

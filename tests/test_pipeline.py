@@ -27,7 +27,7 @@ from dp_data_quality_spark.pipeline import (
 )
 from dp_data_quality_spark.streaming.stream_filter import filtered_writer, score_stream
 
-from .conftest import executed_plans, in_job_group
+from .conftest import executed_plans, in_job_group, part_files
 from .oracle_util import decide_oracle, f1
 
 CFG = FilterConfig()
@@ -87,6 +87,47 @@ def test_keep_drop_and_scrub_match_oracle(spark, transcripts):
     assert score >= 0.99, f"keep/drop F1={score} (tp={tp} fp={fp} fn={fn})"
     assert not mismatched_scrubs, mismatched_scrubs[:3]
     assert not reason_mismatches, reason_mismatches[:3]
+
+
+# Prefixes and lexicon words with SQL-string and regex metacharacters
+# (ASCII letters only: Java (?i) and Python re.I fold other letters
+# differently), whole-text scoring and two expected languages.
+ODD_CFG = FilterConfig(
+    expected_langs=("en", "de"),
+    score_prefix_chars=0,
+    boilerplate_prefixes=("it's a (draft) |", "c:\\temp\\", "price $5.00."),
+    toxicity_lexicon=("o'neil", "back\\slash", "dot.com", "us$d", "f(x", "x|y"),
+)
+
+
+@pytest.mark.parametrize("cfg, present, absent", [
+    (ODD_CFG, ["<TOX>", "<EMAIL>", "<PHONE>"], []),
+    # scrub_pii=False leaves PII in place; the lexicon still scrubs
+    (FilterConfig(scrub_pii=False), ["<TOX>", "@", "555-1234"], ["<EMAIL>", "<PHONE>"]),
+], ids=["sql_escapes", "scrub_pii_off"])
+def test_score_turns_matches_oracle_under_config(spark, cfg, present, absent):
+    texts = synth.strip_truth(synth.transcripts(spark, 30, seed=13)).toPandas().text.tolist()
+    for i, text in enumerate([t for t in texts[:60] if t is not None]):
+        word = cfg.toxicity_lexicon[i % len(cfg.toxicity_lexicon)]
+        texts += [
+            f"{cfg.boilerplate_prefixes[i % len(cfg.boilerplate_prefixes)]} {text}",
+            f"{text} {word} then {word.upper()}",
+            f"{text} mail alice@example.com or call 303-555-1234",
+        ]
+    scored = score_turns(spark.createDataFrame(pd.DataFrame({"text": texts}), "text string"),
+                         spark, cfg)
+    rows = scored.select("text", "keep", "drop_reasons", "scrubbed_text").collect()
+    assert len(rows) == len(texts)
+    mismatches = []
+    for r in rows:
+        keep, reasons, scrubbed = decide_oracle(r.text, cfg)
+        if (r.keep, sorted(r.drop_reasons), r.scrubbed_text) != (keep, sorted(reasons), scrubbed):
+            mismatches.append((r.text, r.keep, r.drop_reasons, r.scrubbed_text, scrubbed))
+    assert not mismatches, mismatches[:3]
+    kept_text = " ".join(r.scrubbed_text for r in rows if r.keep)
+    assert all(p in kept_text for p in present), present
+    assert not any(a in kept_text for a in absent), absent
+    assert any("boilerplate" in r.drop_reasons for r in rows)
 
 
 def test_pipeline_writes_and_lineage(spark, transcripts, tmp_path):
@@ -262,13 +303,26 @@ def test_run_pipeline_leaves_session_conf_unchanged(spark, transcripts, tmp_path
     assert max(tasks) == n_buckets, tasks
 
 
-def test_filtered_writer_runs_two_jobs(spark, transcripts, tmp_path):
-    """A stream micro-batch write is 2 Spark jobs: the scoring stage up
-    to the shuffle that routes each bucket to one task, then the write."""
+def test_filtered_writer_runs_one_job(spark, transcripts, tmp_path):
+    """A stream micro-batch write is 1 Spark job with no shuffle: each
+    input split scores its rows and writes them."""
     write = filtered_writer(str(tmp_path / "out"))
     batch = score_stream(transcripts, spark, CFG, n_buckets=8)
     _, jobs = in_job_group(spark, "stream-write", lambda: write(batch, 0))
-    assert len(jobs) == 2, jobs
+    assert len(jobs) == 1, jobs
+    (plan,) = executed_plans(spark, "stream-write")
+    assert "Exchange" not in [name for name, _ in plan], plan
+
+
+def test_batch_writes_one_file_per_keep_bucket_directory(spark, transcripts, tmp_path):
+    """Each bucket is scored and written by one task, so each
+    (keep, bucket) directory holds one part file, however many input
+    splits fed it."""
+    run_pipeline(spark, transcripts.repartition(5), str(tmp_path / "out"), cfg=CFG,
+                 n_buckets=8, run_id="r")
+    parts = part_files(tmp_path / "out" / "scored")
+    assert set(parts) == {f"keep={k}/bucket={b}" for k in (0, 1) for b in range(8)}, parts
+    assert set(parts.values()) == {1}, parts
 
 
 def test_resume_after_crash_in_metrics_write_starts_fresh(spark, transcripts, tmp_path):

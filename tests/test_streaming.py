@@ -4,6 +4,7 @@ watermarked metrics."""
 
 from __future__ import annotations
 
+import re
 import time
 
 import pytest
@@ -11,12 +12,15 @@ from pyspark.sql import functions as F
 
 from dp_data_quality_spark import synth
 from dp_data_quality_spark.config import FilterConfig
-from dp_data_quality_spark.pipeline import score_turns
+from dp_data_quality_spark.pipeline import score_turns, with_bucket
 from dp_data_quality_spark.streaming.stream_filter import (
+    filtered_writer,
     score_stream,
     start_stream_filter,
     windowed_drop_metrics,
 )
+
+from .conftest import part_files
 
 CFG = FilterConfig()
 
@@ -132,26 +136,37 @@ def test_replayed_micro_batch_is_idempotent(spark, staged_input, tmp_path):
     assert {r.run_id for r in written.select("run_id").distinct().collect()} == {"stream-7"}
 
 
-def test_micro_batch_commits_one_file_per_bucket_directory(spark, tmp_path):
-    # a micro-batch read from several input splits is routed by bucket
-    # before the write, so each (run_id, keep, bucket) directory gets one
-    # part file, not one per split
-    from dp_data_quality_spark.streaming.stream_filter import filtered_writer
-
+def test_micro_batch_is_partitioned_by_run_id_and_keep(spark, tmp_path):
+    # a micro-batch commits per epoch: run_id=stream-N/keep=0|1, with
+    # bucket as a data column, and each input split writes at most one
+    # part file into each directory
     inp = str(tmp_path / "inp")
     synth.strip_truth(synth.transcripts(spark, 60, seed=5)).repartition(3).write.parquet(inp)
     batch = spark.read.parquet(inp)
-    assert batch.rdd.getNumPartitions() >= 2
+    assert batch.rdd.getNumPartitions() == 3
     out = tmp_path / "out"
     filtered_writer(str(out))(score_stream(batch, spark, CFG, 4), 2)
 
-    parts = {}
-    for f in (out / "scored").rglob("part-*"):
-        key = str(f.parent.relative_to(out / "scored"))
-        parts[key] = parts.get(key, 0) + 1
-    assert len(parts) == 8, parts  # run_id=stream-2 × keep 0/1 × 4 buckets
-    assert set(parts.values()) == {1}, parts
-    assert spark.read.parquet(str(out / "scored")).count() == batch.count()
+    parts = part_files(out / "scored")
+    assert set(parts) == {"run_id=stream-2/keep=0", "run_id=stream-2/keep=1"}, parts
+    assert max(parts.values()) <= 3, parts
+    written = spark.read.parquet(str(out / "scored"))
+    assert written.count() == batch.count()
+    rebucketed = with_bucket(written.withColumnRenamed("bucket", "written_bucket"), 4)
+    assert rebucketed.filter(~F.col("bucket").eqNullSafe(F.col("written_bucket"))).count() == 0
+    filtered_writer(str(out))  # a writer made on this layout accepts it
+
+
+def test_filtered_writer_refuses_bucket_directories(spark, tmp_path):
+    # an output written as run_id=*/keep=*/bucket=* cannot be read as one
+    # table with (run_id, keep) micro-batches: the writer refuses it when
+    # it is made, before any micro-batch lands there
+    out = tmp_path / "out"
+    old = out / "scored" / "run_id=stream-0" / "keep=1" / "bucket=3"
+    old.mkdir(parents=True)
+    (old / "part-00000.parquet").write_bytes(b"")
+    with pytest.raises(ValueError, match=re.escape(str(out / "scored"))):
+        filtered_writer(str(out))
 
 
 def test_windowed_metrics_drop_late_rows_beyond_watermark(spark, tmp_path):
