@@ -4,7 +4,7 @@
     spark-submit --py-files dp_data_quality_spark.zip \\
         -m dp_data_quality_spark filter \\
         --input  <parquet/iceberg path> \\
-        --output <dir>  [--rules-config rules.json] [--n-buckets 256] \\
+        --output <dir>  [--filter-config filter.json] [--n-buckets 256] \\
         [--no-resume] [--run-id r1]
 
     python -m dp_data_quality_spark report \\

@@ -168,10 +168,12 @@ def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
 
 def snapshot_fingerprint(df: DataFrame, explicit: str | None = None) -> str:
     """Stand-in for an Iceberg snapshot ID: stable hash of the input file
-    list (empty for in-memory inputs)."""
+    list.  An input that reads no files (in memory, say) needs ``explicit``."""
     if explicit:
         return explicit
     files = sorted(df.inputFiles())
+    if not files:
+        raise ValueError("the input reads no files: pass snapshot_id to name its snapshot")
     return hashlib.md5("\n".join(files).encode()).hexdigest()[:16]
 
 
@@ -282,16 +284,16 @@ def run_pipeline(
     """Score + filter + scrub ``input_df`` (input_hint schema), writing:
 
     - ``{output_dir}/_manifest.json`` — snapshot id, ``n_buckets`` and a
-      config hash.  A run into a directory whose manifest differs raises
-      ``ValueError`` naming the fields, whatever ``resume`` is; delete the
-      directory to start over.
+      config hash; an input that reads no files needs ``snapshot_id``.  A
+      run into a directory whose manifest differs raises ``ValueError``
+      naming the fields, whatever ``resume`` is; delete it to start over.
     - ``{output_dir}/scored``  — ONE pass, partitioned by (keep, bucket):
       ``keep=1`` subtree = kept turns with scrubbed_text (the filtered
       table, one file per bucket, rows in no set order); ``keep=0``
       subtree = per-row drop lineage (keys + reasons, no text payload).
-    - ``{output_dir}/metrics`` — one lineage row per completed bucket,
-      aggregated from the already-written columnar output (a pruned
-      3-column scan), NOT from a cached recompute.
+    - ``{output_dir}/metrics`` — one lineage row per completed bucket
+      (``resume=False`` replaces the table), aggregated from the written
+      columnar output (a pruned 3-column scan), not a cached recompute.
 
     They commit in that order, in 5 Spark jobs on a fresh run.  The
     expensive scoring projection (pandas-UDF langid/ppl + scrub) runs
@@ -399,7 +401,7 @@ def run_pipeline(
             F.current_timestamp().alias("completed_at"),
         )
         .observe(written_buckets, F.count(F.lit(1)).alias("n"))
-        .write.mode("append")
+        .write.mode("append" if resume else "overwrite")
         .parquet(metrics_path)
     )
     return PipelineResult(

@@ -80,6 +80,3 @@ SCRUB_EMAIL = r"[A-Za-z0-9_.+-]+@[A-Za-z0-9-]+(\.[A-Za-z0-9-]+)+"
 SCRUB_PHONE = r"(\+[0-9]{1,2}[ ])?(\([0-9]{3}\)|[0-9]{3})[ .-][0-9]{3}[ .-][0-9]{4}"
 SCRUB_SSN = r"[0-9]{3}-[0-9]{2}-[0-9]{4}"
 SCRUB_IPV4 = rf"\b({_OCTET}\.){{3}}{_OCTET}\b"
-# \b is Java-only; RE2 (DuckDB) twin uses explicit non-digit boundaries
-# handled in the oracle SQL builder instead.
-SCRUB_IPV4_RE2 = rf"({_OCTET}\.){{3}}{_OCTET}"

@@ -5,6 +5,7 @@ from __future__ import annotations
 import json
 
 import pytest
+from pyspark.sql import functions as F
 
 from dp_data_quality_spark import synth
 from dp_data_quality_spark.sources.readers import read_any
@@ -28,6 +29,20 @@ def test_cli_filter(spark, tiny_parquet, tmp_path, monkeypatch, capsys):
     payload = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert payload["buckets_processed"] > 0
     assert spark.read.parquet(payload["metrics_path"]).count() == payload["buckets_processed"]
+
+    # --filter-config overrides FilterConfig fields; a list stands for a
+    # tuple field, and no expected language drops every turn
+    cfg = tmp_path / "filter.json"
+    cfg.write_text(json.dumps({"expected_langs": []}))
+    rc = main(["filter", "--input", tiny_parquet, "--output", str(tmp_path / "none"),
+               "--n-buckets", "4", "--run-id", "t2", "--filter-config", str(cfg)])
+    assert rc == 0
+    payload = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    metrics = spark.read.parquet(payload["metrics_path"])
+    assert metrics.count() == payload["buckets_processed"] > 0
+    rows_in, rows_kept = metrics.agg(F.sum("rows_in"), F.sum("rows_kept")).first()
+    assert rows_in == spark.read.parquet(tiny_parquet).count()
+    assert rows_kept == 0
 
 
 def test_cli_report(spark, tiny_parquet, tmp_path, capsys):

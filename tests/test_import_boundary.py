@@ -1,11 +1,16 @@
-"""The filter, report and stream paths do not import ``ops/``.
+"""The filter, report and stream paths do not import ``ops/``, and no
+import of the package dangles.
 
 ``dp_data_quality_spark/ops/`` is the earlier operator library; it is
 being deleted module by module, which is only safe while nothing
 outside it imports it.  This parses the source (no Spark, no import of
 the package) and fails on any import of ``dp_data_quality_spark.ops``
 from the package outside ``ops/``, from ``__spark_entry__.py`` or from
-``perfbench/``.
+``perfbench/``.  It also fails on any import of a package module that
+does not exist, or of a name that module does not define, anywhere in
+the package, ``__spark_entry__.py``, ``perfbench/`` or ``tests/``:
+imports inside functions run only when a call reaches them, so a
+deleted module would otherwise show only then.
 """
 
 from __future__ import annotations
@@ -18,23 +23,74 @@ PKG = "dp_data_quality_spark"
 OPS = f"{PKG}.ops"
 
 
-def ops_imports(source: str, module: str) -> list[str]:
-    """The ``ops`` modules that ``source`` imports.  ``module`` is its
-    dotted path (``pkg.__init__`` for a package), against which
-    relative imports resolve."""
+def imports(source: str, module: str) -> list[tuple[str, str | None]]:
+    """Every import in ``source``, those inside functions included, as
+    ``(module, None)`` for ``import module`` and ``(module, name)`` for
+    ``from module import name``.  ``module`` is the dotted path of
+    ``source`` (``pkg.__init__`` for a package), against which relative
+    imports resolve."""
     package = module.split(".")[:-1]
     found = []
     for node in ast.walk(ast.parse(source)):
         if isinstance(node, ast.Import):
-            targets = [a.name for a in node.names]
+            found += [(a.name, None) for a in node.names]
         elif isinstance(node, ast.ImportFrom):
             base = package[: len(package) - node.level + 1] if node.level else []
             mod = ".".join(base + ([node.module] if node.module else []))
-            targets = [mod] + [f"{mod}.{a.name}" for a in node.names]
-        else:
-            continue
-        found += [t for t in targets if t == OPS or t.startswith(OPS + ".")]
+            found += [(mod, a.name) for a in node.names]
     return found
+
+
+def ops_imports(source: str, module: str) -> list[str]:
+    """The ``ops`` modules that ``source`` imports."""
+    targets = [t for mod, name in imports(source, module)
+               for t in ([mod] if name is None else [mod, f"{mod}.{name}"])]
+    return [t for t in targets if t == OPS or t.startswith(OPS + ".")]
+
+
+def module_file(module: str) -> Path | None:
+    """The source file of package module ``module``, if it exists."""
+    base = ROOT.joinpath(*module.split("."))
+    return next((p for p in (base.with_suffix(".py"), base / "__init__.py") if p.is_file()),
+                None)
+
+
+def defined_names(path: Path) -> set[str]:
+    """The names a module binds at top level, under ``if``/``try`` too."""
+    names: set[str] = set()
+    todo = list(ast.parse(path.read_text(encoding="utf-8")).body)
+    while todo:
+        node = todo.pop()
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            names |= {(a.asname or a.name).split(".")[0] for a in node.names}
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            names |= {n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)}
+        elif isinstance(node, ast.If):
+            todo += node.body + node.orelse
+        elif isinstance(node, ast.Try):
+            todo += node.body + node.orelse + node.finalbody
+            todo += [s for h in node.handlers for s in h.body]
+    return names
+
+
+def dangling_imports(source: str, module: str) -> list[str]:
+    """The imports of ``dp_data_quality_spark`` modules in ``source``
+    that do not resolve: the module is missing, or ``from module import
+    name`` names neither a submodule nor a top-level name of it."""
+    bad = []
+    for mod, name in imports(source, module):
+        if mod != PKG and not mod.startswith(PKG + "."):
+            continue
+        path = module_file(mod)
+        if path is None:
+            bad.append(mod)
+        elif name not in (None, "*") and module_file(f"{mod}.{name}") is None \
+                and name not in defined_names(path):
+            bad.append(f"{mod}.{name}")
+    return bad
 
 
 def _sources() -> list[Path]:
@@ -67,5 +123,40 @@ def test_no_module_outside_ops_imports_ops():
         for p in sources
         if (hits := ops_imports(p.read_text(encoding="utf-8"),
                                 ".".join(p.relative_to(ROOT).with_suffix("").parts)))
+    }
+    assert offenders == {}
+
+
+def test_dangling_import_detector():
+    flagged = [
+        ("from .ops.similarity import cosine_topk", f"{PKG}.pipeline"),
+        ("def f():\n    from .clustering import kmeans_fit", f"{PKG}.ops.graph"),
+        ("from .ops import similarity", f"{PKG}.pipeline"),
+        ("from dp_data_quality_spark.pipeline import no_such_name", "tests.test_pipeline"),
+        ("import dp_data_quality_spark.no_such_module", "perfbench.probes"),
+    ]
+    for source, module in flagged:
+        assert dangling_imports(source, module), source
+    resolved = [
+        ("from .functions import ngram", f"{PKG}.pipeline"),
+        ("from . import synth", f"{PKG}.__init__"),
+        ("def f():\n    from .perplexity import make_scorer_udf", f"{PKG}.functions.ngram"),
+        ("from dp_data_quality_spark.pipeline import run_pipeline", "tests.test_pipeline"),
+        ("from .conftest import no_such_name", "tests.test_pipeline"),
+        ("import dp_data_quality_spark.functions.ngram as N", "perfbench.probes"),
+    ]
+    for source, module in resolved:
+        assert dangling_imports(source, module) == [], source
+
+
+def test_every_package_import_resolves():
+    sources = (sorted((ROOT / PKG).rglob("*.py")) + [ROOT / "__spark_entry__.py"]
+               + sorted((ROOT / "perfbench").glob("*.py")) + sorted((ROOT / "tests").glob("*.py")))
+    assert (ROOT / "tests" / "test_pipeline.py") in sources
+    offenders = {
+        str(p.relative_to(ROOT)): bad
+        for p in sources
+        if (bad := dangling_imports(p.read_text(encoding="utf-8"),
+                                    ".".join(p.relative_to(ROOT).with_suffix("").parts)))
     }
     assert offenders == {}

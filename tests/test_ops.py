@@ -9,7 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from dp_data_quality_spark.ops import dedup as D
-from dp_data_quality_spark.ops import similarity as S
 from dp_data_quality_spark.ops import textstats as TS
 from dp_data_quality_spark.ops.hashing import MERSENNE_P, h32, h60
 
@@ -154,181 +153,6 @@ def test_simhash_pairs_full_recall_at_threshold(spark):
                 for r in D.simhash_pairs(df, max_hamming=8).collect()})
 
 
-# --- similarity ----------------------------------------------------------
-
-@pytest.fixture(scope="module")
-def vecs(spark):
-    rng = np.random.default_rng(5)
-    rows = [(i, [float(x) for x in rng.standard_normal(8)]) for i in range(30)]
-    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-
-def test_cosine_topk_matches_numpy(vecs):
-    out = S.cosine_topk(vecs, vecs.filter("vec_id = 0"), k=5)
-    got = [(r.neighbor_id, r.sim) for r in out.orderBy("rank").collect()]
-    data = {r.vec_id: np.array(r.embedding, dtype=np.float64)
-            for r in vecs.collect()}
-    q = data[0]
-    sims = sorted(
-        ((j, float(q @ v / (np.linalg.norm(q) * np.linalg.norm(v))))
-         for j, v in data.items() if j != 0),
-        key=lambda t: (-t[1], t[0]),
-    )[:5]
-    assert [g[0] for g in got] == [s[0] for s in sims]
-    for g, s in zip(got, sims):
-        assert abs(g[1] - s[1]) < 1e-5
-
-
-def test_quantize_embeddings_manual_recompute(vecs):
-    """Int8 codes match the guarded floor(x·127/max|x|) formula exactly,
-    land in [-127, 127], and all-zero vectors quantize to zeros."""
-    import math
-
-    src = {r.vec_id: r.embedding for r in vecs.collect()}
-    got = {r.vec_id: r.embedding
-           for r in S.quantize_embeddings(vecs).collect()}
-    for vid, x in src.items():
-        mx = max(abs(float(v)) for v in x)
-        exp = [0 if mx == 0 else int(math.floor(float(v) * 127.0 / mx))
-               for v in x]
-        assert got[vid] == exp, vid
-        assert all(-127 <= c <= 127 for c in got[vid])
-    zero = vecs.sparkSession.createDataFrame(
-        [(99, [0.0] * 8)], "vec_id long, embedding array<float>")
-    assert S.quantize_embeddings(zero).collect()[0].embedding == [0] * 8
-    # the stored column really is tinyint (the 4x memory claim)
-    dt = dict(S.quantize_embeddings(vecs).dtypes)["embedding"]
-    assert dt == "array<tinyint>"
-
-
-def test_quantized_ann_close_to_exact(vecs):
-    """Quantized ranking approximates the exact ranking: high overlap in
-    the top-5 sets and identical top-1 for most queries (int8 keeps
-    ~7 significant bits per component)."""
-    exact = S.cosine_topk(vecs, vecs.filter("vec_id < 3"), k=5)
-    quant = S.quantized_ann_topk(vecs, vecs.filter("vec_id < 3"), k=5)
-    ex = {}
-    for r in exact.collect():
-        ex.setdefault(r.query_id, []).append((r.rank, r.neighbor_id))
-    qz = {}
-    for r in quant.collect():
-        qz.setdefault(r.query_id, []).append((r.rank, r.neighbor_id))
-    assert set(ex) == set(qz) == {0, 1, 2}
-    overlap = 0
-    for q in ex:
-        e = {n for _, n in ex[q]}
-        z = {n for _, n in qz[q]}
-        overlap += len(e & z)
-    assert overlap >= 12  # ≥80% of 15 slots agree
-
-
-def test_quantized_rerank_sims_are_exact(vecs):
-    """Stage-2 re-rank reports EXACT float cosines: every (query,
-    neighbor) pair the rerank returns carries the same sim the exact
-    brute-force path computes for that pair, and with a shortlist this
-    wide the returned top-5 IS the exact top-5."""
-    exact = S.cosine_topk(vecs, vecs.filter("vec_id < 3"), k=5)
-    rer = S.quantized_rerank_topk(
-        vecs, vecs.filter("vec_id < 3"), k=5, shortlist=30)
-    ex = {(r.query_id, r.neighbor_id): (r.rank, r.sim)
-          for r in exact.collect()}
-    got = {(r.query_id, r.neighbor_id): (r.rank, r.sim)
-           for r in rer.collect()}
-    assert got == ex
-
-
-def test_quantized_rerank_plan_broadcasts_candidates(vecs):
-    """The float corpus never shuffles: candidate ids and queries reach
-    the scan via broadcast joins (no SortMergeJoin / CartesianProduct
-    in the re-rank stage)."""
-    plan = S.quantized_rerank_topk(
-        vecs, vecs.filter("vec_id < 3"), k=5, shortlist=10
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "SortMergeJoin" not in plan
-    assert "BroadcastHashJoin" in plan
-
-
-def test_semantic_neardup_within_cluster_exact_sims(vecs):
-    """SemDeDup pairs: every emitted pair is same-cluster under the
-    deterministic k-means fit, carries the EXACT cosine (matches the
-    all-pairs numpy recompute), and every same-cluster pair above the
-    threshold is present — within clusters, recall is exact."""
-    from dp_data_quality_spark.ops.clustering import kmeans
-
-    out = {(r.id_a, r.id_b): (r.cluster, r.sim)
-           for r in S.semantic_neardup_pairs(
-               vecs, k=4, n_iter=3, threshold=0.2).collect()}
-    assigned, _ = kmeans(vecs, k=4, n_iter=3)
-    clusters = {r.vec_id: r.cluster for r in assigned.collect()}
-    data = {r.vec_id: np.array(r.embedding, dtype=np.float64)
-            for r in vecs.collect()}
-    expect = {}
-    for a in data:
-        for b in data:
-            if a < b and clusters[a] == clusters[b]:
-                sim = float(data[a] @ data[b] / (
-                    np.linalg.norm(data[a]) * np.linalg.norm(data[b])))
-                if sim >= 0.2:
-                    expect[(a, b)] = (clusters[a], sim)
-    assert set(out) == set(expect)
-    for k_, (cl, sim) in out.items():
-        assert cl == expect[k_][0]
-        assert abs(sim - expect[k_][1]) < 1e-5
-
-
-def test_semantic_neardup_no_cartesian(vecs):
-    """The candidate join is an equi-join on the cluster id — no
-    CartesianProduct / BroadcastNestedLoopJoin anywhere in the plan."""
-    plan = S.semantic_neardup_pairs(
-        vecs, k=4, n_iter=2, threshold=0.2
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_lsh_ann_is_bucket_subset(vecs):
-    brute = {(r.query_id, r.neighbor_id)
-             for r in S.cosine_topk(vecs, vecs.filter("vec_id < 3"), k=30).collect()}
-    ann = {(r.query_id, r.neighbor_id)
-           for r in S.lsh_ann_topk(vecs, vecs.filter("vec_id < 3"), k=30).collect()}
-    assert ann  # buckets are non-trivial
-    assert ann <= brute  # candidates are a subset of the full ranking
-
-
-def test_neardup_pairs_bucketed_no_cartesian(spark):
-    # full-width vectors so the hyperplane buckets are non-degenerate
-    rng = np.random.default_rng(11)
-    base = rng.standard_normal((8, S.EMB_DIM))
-    rows = []
-    for i in range(40):
-        v = base[i % 8] + 0.15 * rng.standard_normal(S.EMB_DIM)
-        rows.append((i, [float(x) for x in v]))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-    out = S.neardup_pairs(df, threshold=0.8)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-
-    got = {(r.id_a, r.id_b): r.sim for r in out.collect()}
-    assert got  # clustered data must produce near-dup pairs
-
-    # every emitted pair is a true near-dup (subset of exact all-pairs)
-    data = {i: np.array(v, dtype=np.float64) for i, v in rows}
-    exact = {}
-    for i in data:
-        for j in data:
-            if i < j:
-                s = float(data[i] @ data[j] /
-                          (np.linalg.norm(data[i]) * np.linalg.norm(data[j])))
-                if s >= 0.8:
-                    exact[(i, j)] = s
-    assert set(got) <= set(exact)
-    for pair, sim in got.items():
-        assert abs(sim - exact[pair]) < 1e-5
-
-
 # --- textstats -----------------------------------------------------------
 
 def test_token_and_word_counts(spark):
@@ -368,103 +192,6 @@ def test_fingerprint_normalization(spark):
     ).select(TS.fingerprint(F.col("t")).alias("fp"))
     a, b = [r.fp for r in df.collect()]
     assert a == b
-
-
-# --- in-engine text embeddings --------------------------------------------
-
-def test_hashed_ngram_embeddings_properties(spark):
-    from dp_data_quality_spark.ops.embedding import (
-        EMBED_DIM, hashed_ngram_embeddings,
-    )
-
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog"),
-        (2, "the quick brown fox jumps over the lazy dog"),  # identical
-        (3, "hi"),  # < 3 words: no shingles
-        (4, "a wholly different text about spark physical plans"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    emb = {
-        r.doc_id: list(r.embedding)
-        for r in hashed_ngram_embeddings(df).collect()
-    }
-    assert set(emb) == {1, 2, 4}  # shingle-less doc absent (minhash convention)
-    assert emb[1] == emb[2] and emb[1] != emb[4]
-    assert all(len(v) == EMBED_DIM for v in emb.values())
-    # components are ±1 sums over 7 distinct shingles: L1 can only lose
-    # mass in pairs (a +1/-1 collision), never gain it
-    l1 = sum(abs(x) for x in emb[1])
-    assert 0 < l1 <= 7 and l1 % 2 == 7 % 2
-
-
-def test_hashed_ngram_embeddings_manual_recompute(spark):
-    """Pin the bucket/sign arithmetic against an independent hashlib
-    recompute (bucket = h32 % 64, sign = bit 6 of h32)."""
-    import hashlib
-
-    from dp_data_quality_spark.ops.embedding import hashed_ngram_embeddings
-
-    text = "alpha beta gamma delta epsilon"
-    words = text.split()
-    want = [0] * 64
-    for s in {" ".join(words[i : i + 3]) for i in range(len(words) - 2)}:
-        h = int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
-        want[h % 64] += 1 if ((h >> 6) & 1) == 0 else -1
-    df = spark.createDataFrame([(7, text)], "doc_id long, text string")
-    got = list(hashed_ngram_embeddings(df).collect()[0].embedding)
-    assert got == want
-
-
-def test_hashed_ngram_embeddings_plan_shape(spark):
-    """One exchange total (the shingle window); both aggregations combine
-    map-side; no Python anywhere — the embed stage is pure codegen."""
-    import re
-
-    from dp_data_quality_spark.ops.embedding import hashed_ngram_embeddings
-
-    df = spark.createDataFrame(
-        [(i, f"word{i} and some more words to shingle here {i}")
-         for i in range(20)],
-        "doc_id long, text string",
-    )
-    plan = (
-        hashed_ngram_embeddings(df)._jdf.queryExecution()
-        .executedPlan().toString()
-    )
-    assert len(re.findall(r"Exchange", plan)) == 1, plan
-    assert "partial_sum" in plan and "partial_collect_list" in plan
-    assert "ArrowEval" not in plan and "BatchEvalPython" not in plan
-
-
-def test_hashed_ngram_embeddings_dim_validation(spark):
-    import pytest as _pytest
-
-    from dp_data_quality_spark.ops.embedding import hashed_ngram_embeddings
-
-    df = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
-    with _pytest.raises(ValueError, match="power of two"):
-        hashed_ngram_embeddings(df, dim=48)
-
-
-def test_ann_from_text_finds_near_duplicate(spark):
-    """End-to-end similarity from raw text: a near-copy document is its
-    source's top-1 cosine neighbor via in-engine embeddings."""
-    from dp_data_quality_spark.ops.embedding import hashed_ngram_embeddings
-    from dp_data_quality_spark.ops.similarity import cosine_topk
-
-    base = ("the quick brown fox jumps over the lazy dog while the "
-            "planner broadcasts the small side")
-    rows = [(0, base), (100, base + " tonight")] + [
-        (i, f"unrelated text number {i} discussing topic {i * 7} "
-            f"with filler tokens {i * 3} {i * 5} {i * 11}")
-        for i in range(1, 9)
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    emb = hashed_ngram_embeddings(df)
-    top = cosine_topk(
-        emb, emb.filter(F.col("doc_id") == 0), k=1, id_col="doc_id"
-    ).collect()
-    assert top[0].neighbor_id == 100 and top[0].sim > 0.8
 
 
 # --- sources: json flatten ----------------------------------------------
@@ -577,45 +304,6 @@ def test_add_text_stats_preserves_caller_dunder_columns(spark):
     out = add_text_stats(df)
     assert "__mine" in out.columns
     assert out.first()["__mine"] == 7
-
-
-# --- clustering ----------------------------------------------------------
-
-def test_kmeans_converges_and_is_deterministic(spark, vecs):
-    from dp_data_quality_spark.ops.clustering import kmeans
-
-    assigned, sses = kmeans(vecs, k=4, n_iter=4)
-    rows = assigned.collect()
-    assert len(rows) == vecs.count()
-    assert {r.cluster for r in rows} <= set(range(4))
-    # Lloyd's SSE is non-increasing
-    assert all(b <= a + 1e-9 for a, b in zip(sses, sses[1:])), sses
-    # deterministic across runs
-    again, _ = kmeans(vecs, k=4, n_iter=4)
-    assert sorted((r.vec_id, r.cluster) for r in rows) == sorted(
-        (r.vec_id, r.cluster) for r in again.collect()
-    )
-
-
-def test_ivf_kmeans_centroids_recall(vecs):
-    # trained coarse quantizer: recall@10 vs exact ground truth should be
-    # reasonable and the op deterministic across runs
-    queries = vecs.filter("vec_id < 5")
-    exact = {}
-    for r in S.cosine_topk(vecs, queries, k=10).collect():
-        exact.setdefault(r.query_id, set()).add(r.neighbor_id)
-    got = {}
-    out1 = S.ivf_kmeans_ann_topk(vecs, queries, k=10, n_centroids=4,
-                                 n_probe=2, n_iter=3).collect()
-    for r in out1:
-        got.setdefault(r.query_id, set()).add(r.neighbor_id)
-    hits = sum(len(exact[q] & got.get(q, set())) for q in exact)
-    total = sum(len(exact[q]) for q in exact)
-    assert hits / total >= 0.5  # probes half the lists on clustered data
-    out2 = S.ivf_kmeans_ann_topk(vecs, queries, k=10, n_centroids=4,
-                                 n_probe=2, n_iter=3).collect()
-    key = lambda rows: sorted((r.query_id, r.neighbor_id, r.rank) for r in rows)
-    assert key(out1) == key(out2)
 
 
 # --- timeseries ----------------------------------------------------------

@@ -35,9 +35,18 @@ N_CONVS = 120
 SEED = 42
 
 
+def staged(spark, df, path):
+    """``df`` written to parquet at ``path`` and read back: run_pipeline
+    names an input's snapshot by its file list, which an in-memory
+    input does not have."""
+    df.write.parquet(str(path))
+    return spark.read.parquet(str(path))
+
+
 @pytest.fixture(scope="module")
-def transcripts(spark):
-    return synth.strip_truth(synth.transcripts(spark, N_CONVS, seed=SEED)).cache()
+def transcripts(spark, tmp_path_factory):
+    return staged(spark, synth.strip_truth(synth.transcripts(spark, N_CONVS, seed=SEED)),
+                  tmp_path_factory.mktemp("transcripts") / "input")
 
 
 def files_under(root):
@@ -213,9 +222,9 @@ def test_stable_ordering_under_input_shuffle(spark, transcripts, tmp_path):
 
 
 def test_skew_mega_thread_completes(spark, tmp_path):
-    df = synth.strip_truth(
+    df = staged(spark, synth.strip_truth(
         synth.transcripts(spark, 40, seed=3, mega_threads=1, mega_turns=20_000)
-    )
+    ), tmp_path / "input")
     res = run_pipeline(spark, df, str(tmp_path / "out"), cfg=CFG,
                        n_buckets=8, run_id="skew")
     metrics = spark.read.parquet(res.metrics_path)
@@ -266,8 +275,10 @@ def test_crash_between_data_and_metrics_is_idempotent(spark, transcripts, tmp_pa
 
 def test_empty_input_returns_clean_result(spark, transcripts, tmp_path):
     # zero rows take the normal path: the scored table and the metrics
-    # table are committed and read back empty
-    empty = transcripts.filter(F.lit(False))
+    # table are committed and read back empty.  The predicate reads the
+    # data: a literal FALSE would optimize the input to an empty
+    # relation that reads no files.
+    empty = transcripts.filter(F.col("turn_idx") < 0)
     res = run_pipeline(spark, empty, str(tmp_path / "out"), n_buckets=4, run_id="r0")
     assert res.buckets_processed == 0
     assert res.buckets_skipped == 0
@@ -399,6 +410,35 @@ def test_rerun_with_other_snapshot_or_config_raises(spark, transcripts, tmp_path
     res = run_pipeline(spark, transcripts, out, cfg=same, n_buckets=4, run_id="r2",
                        snapshot_id="snap-a")
     assert (res.buckets_processed, res.buckets_skipped) == (0, 4)
+
+
+def test_input_without_files_needs_snapshot_id(spark, transcripts, tmp_path):
+    """Inputs that read no files all have the same file list, so two
+    different ones would get one snapshot id, and the second run would
+    skip every bucket and keep the first input's rows.  Without an
+    explicit ``snapshot_id`` such an input raises before anything is
+    written."""
+    out = tmp_path / "out"
+    inputs = [synth.strip_truth(synth.transcripts(spark, 100, seed=seed)) for seed in (1, 2)]
+    for df in inputs + [transcripts.filter(F.lit(False))]:
+        with pytest.raises(ValueError, match="snapshot_id"):
+            run_pipeline(spark, df, str(out), cfg=CFG, n_buckets=4, run_id="r")
+        assert not out.exists()
+
+
+def test_rerun_without_resume_replaces_metrics(spark, transcripts, tmp_path):
+    """``resume=False`` rewrites every bucket, so its metrics replace the
+    earlier run's: one row per bucket, and the rows count each input
+    turn once."""
+    out = str(tmp_path / "out")
+    run_pipeline(spark, transcripts, out, cfg=CFG, n_buckets=4, run_id="r1")
+    res = run_pipeline(spark, transcripts, out, cfg=CFG, n_buckets=4, run_id="r2",
+                       resume=False)
+    assert (res.buckets_processed, res.buckets_skipped) == (4, 0)
+    metrics = spark.read.parquet(res.metrics_path)
+    assert metrics.count() == 4
+    assert metrics.agg(F.sum("rows_in")).first()[0] == transcripts.count()
+    assert {r.run_id for r in metrics.select("run_id").collect()} == {"r2"}
 
 
 def test_uri_output_keeps_scheme(spark, transcripts, tmp_path):
