@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .hashing import MINHASH_COEFFS, h32, h60, minhash_perm
+from .hashing import MINHASH_COEFFS, h32, h60
 
 N_BANDS = 4
 ROWS_PER_BAND = 4
@@ -311,37 +311,6 @@ def minhash_lsh_pairs(
     )
     return joined.filter(F.col("jaccard") >= threshold).select(
         "doc_a", "doc_b", "jaccard"
-    )
-
-
-def ngram_doc_frequencies(
-    df: DataFrame,
-    n: int = 3,
-    k: int = 20,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Top-``k`` word n-grams by DOCUMENT frequency: (shingle, doc_freq,
-    rank), ties broken by shingle ascending.
-
-    The corpus-wide n-gram panel of an LLM-data pipeline — boilerplate
-    and contamination show up as n-grams with anomalously high document
-    frequency.  Reuses the codegen'd shingle explode (per-doc DISTINCT
-    shingles, so each document counts once per n-gram); one groupBy +
-    one rank window over the (much smaller) n-gram counts."""
-    from pyspark.sql import Window
-
-    sh = _exploded_shingles(df, id_col, text_col, n)
-    counts = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("doc_freq"))
-    # orderBy().limit(k) lowers to TakeOrderedAndProject — every partition
-    # keeps its local top-k and only k rows reach the driver-side merge.
-    # A global rank window here instead would funnel the ENTIRE n-gram
-    # vocabulary through one task; the row_number below runs over just
-    # the k survivors.
-    top = counts.orderBy(F.col("doc_freq").desc(), F.col("shingle").asc()).limit(k)
-    w = Window.orderBy(F.col("doc_freq").desc(), F.col("shingle").asc())
-    return top.withColumn("rank", F.row_number().over(w)).select(
-        "shingle", "doc_freq", "rank"
     )
 
 

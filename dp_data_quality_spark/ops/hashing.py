@@ -48,17 +48,3 @@ def h60(c: Column) -> Column:
 def minhash_perm(x: Column, a: int, b: int) -> Column:
     """One affine MinHash permutation of a 32-bit hash value."""
     return (F.lit(a) * (x % MERSENNE_P) + F.lit(b)) % MERSENNE_P
-
-
-# --- matching DuckDB SQL fragments (oracle side) -------------------------
-
-def sql_h32(expr: str) -> str:
-    return f"CAST('0x' || substr(md5({expr}), 1, 8) AS BIGINT)"
-
-
-def sql_h60(expr: str) -> str:
-    return f"CAST('0x' || substr(md5({expr}), 1, 15) AS BIGINT)"
-
-
-def sql_minhash_perm(x_expr: str, a: int, b: int) -> str:
-    return f"(({a} * (({x_expr}) % {MERSENNE_P}) + {b}) % {MERSENNE_P})"

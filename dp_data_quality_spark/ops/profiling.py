@@ -348,66 +348,6 @@ def sql_profile_quantiles_disc(
     return "\nUNION ALL\n".join(parts)
 
 
-def sql_profile_quantiles(
-    table: str, columns: list[str], probs: tuple[float, ...] = (0.25, 0.5, 0.75)
-) -> str:
-    parts = [
-        f"SELECT '{c}' AS col_name, " + ", ".join(
-            f"round(quantile_cont(CAST({c} AS DOUBLE), {p}), 6) AS q_{int(p * 100)}"
-            for p in probs
-        ) + f" FROM {table}"
-        for c in columns
-    ]
-    return "\nUNION ALL\n".join(parts)
-
-
-def numeric_histogram(df: DataFrame, column: str, nbins: int = 10) -> DataFrame:
-    """Equi-width histogram of a numeric column: (bucket, lo, hi, n).
-
-    Fully lazy two-pass plan: the (min, max) single-row aggregate rides
-    into the bucketing pass as a broadcast 1-row crossJoin — no driver
-    action, so the histogram composes into larger jobs.  The top edge
-    clamps into the last bucket; nulls are excluded; a constant column
-    yields one bucket.  Bucket arithmetic is plain IEEE double ops
-    (``floor((v-mn)/width)``) mirrored exactly by the SQL oracle."""
-    v = F.col(f"`{column}`").cast("double")
-    stats = df.agg(
-        F.min(v).alias("__mn"), F.max(v).alias("__mx")
-    )
-    width = (F.col("__mx") - F.col("__mn")) / F.lit(float(nbins))
-    bucket = F.when(
-        F.col("__mx") == F.col("__mn"), F.lit(0)
-    ).otherwise(
-        F.least(F.floor((v - F.col("__mn")) / width), F.lit(nbins - 1))
-    ).cast("int")
-    return (
-        df.filter(v.isNotNull())
-        .crossJoin(F.broadcast(stats))
-        .select(bucket.alias("bucket"), "__mn", "__mx")
-        .groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.first("__mn").alias("__mn"),
-            F.first("__mx").alias("__mx"),
-        )
-        .select(
-            "bucket",
-            F.round(
-                F.col("__mn")
-                + F.col("bucket") * ((F.col("__mx") - F.col("__mn")) / F.lit(float(nbins))),
-                6,
-            ).alias("lo"),
-            F.round(
-                F.col("__mn")
-                + (F.col("bucket") + 1)
-                * ((F.col("__mx") - F.col("__mn")) / F.lit(float(nbins))),
-                6,
-            ).alias("hi"),
-            "n",
-        )
-    )
-
-
 def frequent_items(
     df: DataFrame, columns: list[str], k: int = 5
 ) -> DataFrame:
@@ -517,54 +457,3 @@ def frequent_items_approx(
         .filter(F.col("rank") <= k)
         .select("col_name", "value", "n", "rank")
     )
-
-
-def sql_frequent_items(table: str, columns: list[str], k: int = 5) -> str:
-    parts = [
-        f"SELECT '{c}' AS col_name, CAST({c} AS VARCHAR) AS value, "
-        f"count(*) AS n FROM {table} WHERE {c} IS NOT NULL GROUP BY 2"
-        for c in columns
-    ]
-    unioned = "\nUNION ALL\n".join(parts)
-    return f"""
-WITH counts AS ({unioned}),
-ranked AS (
-  SELECT col_name, value, n,
-         CAST(row_number() OVER (PARTITION BY col_name ORDER BY n DESC, value ASC) AS INT) AS rank
-  FROM counts
-)
-SELECT col_name, value, n, rank FROM ranked WHERE rank <= {k}
-"""
-
-
-def sql_numeric_histogram(table: str, column: str, nbins: int = 10) -> str:
-    v = f"CAST({column} AS DOUBLE)"
-    return f"""
-WITH s AS (SELECT min({v}) AS mn, max({v}) AS mx FROM {table}),
-b AS (
-  SELECT CAST(CASE WHEN s.mx = s.mn THEN 0
-              ELSE least(floor(({v} - s.mn) / ((s.mx - s.mn) / {float(nbins)})), {nbins - 1})
-         END AS INT) AS bucket, s.mn, s.mx
-  FROM {table}, s WHERE {column} IS NOT NULL
-)
-SELECT bucket,
-       round(mn + bucket * ((mx - mn) / {float(nbins)}), 6) AS lo,
-       round(mn + (bucket + 1) * ((mx - mn) / {float(nbins)}), 6) AS hi,
-       count(*) AS n
-FROM b GROUP BY bucket, mn, mx
-"""
-
-
-def sql_profile_table(table: str, columns: list[str]) -> str:
-    """DuckDB twin: same stats per column, UNION ALL of per-column
-    aggregates (the small-scale oracle doesn't need the one-pass plan)."""
-    parts = [
-        f"SELECT '{c}' AS col_name, count(*) AS n_rows, "
-        f"count(*) - count({c}) AS n_nulls, "
-        f"count(DISTINCT {c}) AS n_distinct, "
-        f"round(count({c}) / count(*), 6) AS completeness, "
-        f"CAST(min({c}) AS VARCHAR) AS min_val, "
-        f"CAST(max({c}) AS VARCHAR) AS max_val FROM {table}"
-        for c in columns
-    ]
-    return "\nUNION ALL\n".join(parts)

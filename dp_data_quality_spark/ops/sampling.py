@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .hashing import h32, sql_h32
+from .hashing import h32
 
 # resolution of the split boundaries (fractions quantized to 1/10000)
 _BUCKETS = 10_000
@@ -104,11 +104,6 @@ def _tempered(c: Column, alpha: float) -> Column:
     raise ValueError("alpha must be one of 1.0, 0.5, 0.25 (sqrt-exact)")
 
 
-def _sql_tempered(c: str, alpha: float) -> str:
-    x = f"CAST({c} AS DOUBLE)"
-    return {1.0: x, 0.5: f"sqrt({x})", 0.25: f"sqrt(sqrt({x}))"}[alpha]
-
-
 def temperature_sample(
     df: DataFrame,
     group_col: str,
@@ -183,75 +178,3 @@ def temperature_sample(
         .filter(F.col(out_rank) <= F.col("_quota"))
         .drop("_grp", "_quota")
     )
-
-
-def sql_temperature_sample(
-    table: str, group_col: str, n_total: int, key_col: str,
-    alpha: float = 0.5,
-) -> str:
-    """DuckDB twin of :func:`temperature_sample` — identical integer
-    quota arithmetic, identical md5 fill order."""
-    h = sql_h32(f"CAST(t.{key_col} AS VARCHAR)")
-    return f"""
-WITH cnt AS (
-  SELECT {group_col} AS grp, count(*) AS c,
-         CAST(floor({_sql_tempered('count(*)', alpha)} * 1000000.0) AS BIGINT) AS w
-  FROM {table} GROUP BY 1
-),
-tot AS (
-  -- "wsum", not "W": SQL identifiers are case-insensitive, so "W"
-  -- would collide with the weight column "w" (same bug class as the
-  -- Spark side's _wsum rename)
-  SELECT grp, c, w, sum(w) OVER () AS wsum FROM cnt
-),
-alloc AS (
-  SELECT grp, c,
-         CAST(floor(({n_total} * w) / wsum) AS BIGINT) AS base,
-         ({n_total} * w) % wsum AS rem
-  FROM tot
-),
-quota AS (
-  SELECT grp,
-         least(base + (CASE WHEN row_number() OVER (ORDER BY rem DESC, grp ASC)
-                            <= {n_total} - sum(base) OVER () THEN 1 ELSE 0 END), c)
-           AS quota
-  FROM alloc
-),
-ranked AS (
-  SELECT t.*, CAST(row_number() OVER (
-      PARTITION BY t.{group_col} ORDER BY {h} ASC,
-      t.{key_col} ASC) AS INT) AS sample_rank
-  FROM {table} t
-)
-SELECT r.* FROM ranked r JOIN quota q ON r.{group_col} = q.grp
-WHERE r.sample_rank <= q.quota
-"""
-
-
-def sql_stratified_sample(
-    table: str, strata_cols: list[str], k: int, key_col: str
-) -> str:
-    """DuckDB twin of :func:`stratified_sample` — same md5 hash order."""
-    strata = ", ".join(strata_cols)
-    h = sql_h32(f"CAST({key_col} AS VARCHAR)")
-    return f"""
-SELECT * FROM (
-  SELECT *, CAST(row_number() OVER (
-      PARTITION BY {strata} ORDER BY {h} ASC, {key_col} ASC
-  ) AS INT) AS sample_rank
-  FROM {table}
-) WHERE sample_rank <= {k}
-"""
-
-
-def sql_split_column(key: str, fractions: dict[str, float]) -> str:
-    """DuckDB twin of :func:`split_column` — same md5 bucket, same
-    boundaries."""
-    bucket = f"({sql_h32(f'CAST({key} AS VARCHAR)')} % {_BUCKETS})"
-    bounds = _boundaries(fractions)
-    # nested CASE mirroring the Column when-chain; the innermost arm is
-    # the final split name (its boundary is always 10000)
-    expr = f"'{bounds[-1][0]}'"
-    for name, hi in reversed(bounds[:-1]):
-        expr = f"(CASE WHEN {bucket} < {hi} THEN '{name}' ELSE {expr} END)"
-    return expr

@@ -1,8 +1,7 @@
 """Text analysis operators: token counting, quality scoring, language
 heuristics, document fingerprinting.
 
-Everything is a pure Column expression (whole-stage codegen, no UDFs);
-every function has an exact ANSI-SQL twin for the correctness oracle.
+Everything is a pure Column expression (whole-stage codegen, no UDFs).
 At 100 TB these are narrow map-side transforms — no shuffle at all
 unless the caller aggregates.
 """
@@ -330,55 +329,6 @@ def strip_boilerplate(
     )
 
 
-def dedup_lines_within_doc(
-    df,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sep: str = "\n",
-):
-    """Remove repeated lines WITHIN each document, keeping the first
-    occurrence in original order (the MassiveText/Gopher
-    repetition-cleanup step — self-repeating docs are a strong
-    low-quality signal, and the repeats themselves waste tokens).
-
-    Returns (id_col, clean_text, n_removed).  Companion to
-    :func:`strip_boilerplate`, which removes lines frequent ACROSS
-    documents.
-
-    Scale: first-occurrence ranking is a window over
-    ``(doc_id, md5(line))`` — partitioned by doc AND line digest, so
-    parallelism is per (doc, distinct line), never per doc alone, and
-    the shuffle key is a constant 32-byte digest; the rebuild is one
-    groupBy on the doc id with a sort-by-position array.
-    """
-    from pyspark.sql.window import Window
-
-    lines = df.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), sep)).alias("pos", "line"),
-    ).withColumn("lh", F.md5(F.col("line")))
-    win = Window.partitionBy(id_col, "lh").orderBy("pos")
-    ranked = lines.withColumn("occ", F.row_number().over(win))
-    return ranked.groupBy(id_col).agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(F.col("occ") == 1, F.struct("pos", "line"))
-                    )
-                ),
-                lambda s: s["line"],
-            ),
-            sep,
-        ).alias("clean_text"),
-        F.sum((F.col("occ") > 1).cast("int")).cast("int").alias("n_removed"),
-    )
-
-
-def fingerprint_hex(c: Column) -> Column:
-    return F.md5(normalize_text(c))
-
-
 # --- oracle SQL fragments -------------------------------------------------
 SQL_NORMALIZE = "regexp_replace(lower(trim({c})), '\\s+', ' ', 'g')"
 SQL_WORDS = (
@@ -388,85 +338,6 @@ SQL_WORDS = (
 
 def sql_words(c: str) -> str:
     return SQL_WORDS.format(c=c)
-
-
-def sql_token_count(c: str) -> str:
-    return f"len(regexp_extract_all({c}, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]'))"
-
-
-def sql_stopword_hits(c: str, lang: str) -> str:
-    lst = "[" + ", ".join(f"'{w}'" for w in STOPWORDS[lang]) + "]"
-    return f"len(list_filter({sql_words(c)}, x -> list_contains({lst}, x)))"
-
-
-def sql_lang_guess(c: str) -> str:
-    hits = {lang: sql_stopword_hits(c, lang) for lang in LANG_ORDER}
-    best = None
-    for lang in LANG_ORDER:
-        h = hits[lang]
-        if best is None:
-            best = f"struct_pack(h := {h}, lang := '{lang}')"
-        else:
-            best = (
-                f"(CASE WHEN {h} > struct_extract({best}, 'h') "
-                f"THEN struct_pack(h := {h}, lang := '{lang}') ELSE {best} END)"
-            )
-    return (
-        f"(CASE WHEN struct_extract({best}, 'h') > 0 "
-        f"THEN struct_extract({best}, 'lang') ELSE 'und' END)"
-    )
-
-
-def sql_alpha_ratio(c: str) -> str:
-    return (
-        f"(CASE WHEN coalesce(length({c}), 0) = 0 THEN 0.0 ELSE "
-        f"length(regexp_replace({c}, '[^A-Za-z]', '', 'g')) / CAST(length({c}) AS DOUBLE) END)"
-    )
-
-
-def sql_digit_ratio(c: str) -> str:
-    return (
-        f"(CASE WHEN coalesce(length({c}), 0) = 0 THEN 0.0 ELSE "
-        f"length(regexp_replace({c}, '[^0-9]', '', 'g')) / CAST(length({c}) AS DOUBLE) END)"
-    )
-
-
-def sql_word_count(c: str) -> str:
-    return f"len({sql_words(c)})"
-
-
-def sql_stopword_ratio(c: str, lang: str = "en") -> str:
-    return (
-        f"(CASE WHEN {sql_word_count(c)} = 0 THEN 0.0 ELSE "
-        f"{sql_stopword_hits(c, lang)} / CAST({sql_word_count(c)} AS DOUBLE) END)"
-    )
-
-
-def sql_mean_word_len(c: str) -> str:
-    total = f"list_sum(list_transform({sql_words(c)}, x -> len(x)))"
-    return (
-        f"(CASE WHEN {sql_word_count(c)} = 0 THEN 0.0 ELSE "
-        f"coalesce({total}, 0) / CAST({sql_word_count(c)} AS DOUBLE) END)"
-    )
-
-
-def sql_quality_score(c: str) -> str:
-    mwl = sql_mean_word_len(c)
-    return (
-        f"round(0.4 * {sql_alpha_ratio(c)} + 0.3 * {sql_stopword_ratio(c)} "
-        f"+ 0.2 * (1.0 - {sql_digit_ratio(c)}) "
-        f"+ 0.1 * (CASE WHEN {mwl} >= 3 AND {mwl} <= 10 THEN 1.0 ELSE 0.0 END), 6)"
-    )
-
-
-def sql_fingerprint(c: str) -> str:
-    from .hashing import sql_h60
-
-    return sql_h60(SQL_NORMALIZE.format(c=c))
-
-
-def sql_fingerprint_hex(c: str) -> str:
-    return f"md5({SQL_NORMALIZE.format(c=c)})"
 
 
 def vocab_coverage(df, text_col: str = "text", k: int = 50):
@@ -543,13 +414,4 @@ def fix_mojibake(c: Column) -> Column:
     out = c
     for broken, fixed in MOJIBAKE_PAIRS:
         out = F.replace(out, F.lit(broken), F.lit(fixed))
-    return out
-
-
-def sql_fix_mojibake(c: str) -> str:
-    out = c
-    for broken, fixed in MOJIBAKE_PAIRS:
-        b = broken.replace("'", "''")
-        f_ = fixed.replace("'", "''")
-        out = f"replace({out}, '{b}', '{f_}')"
     return out

@@ -238,11 +238,6 @@ def columns_not_in_data(data_columns: list[str], meta_columns: list[str]) -> lis
     return [c for c in (x.upper() for x in meta_columns) if c not in data_up]
 
 
-def columns_in_both(data_columns: list[str], meta_columns: list[str]) -> list[str]:
-    data_up = [c.upper() for c in data_columns]
-    return [c for c in (x.upper() for x in meta_columns) if c in data_up]
-
-
 def normalize_column_names(df: DataFrame) -> DataFrame:
     """'-'→'_', strip '@' (validation_rulebook.py:33-43) in one projection."""
     return df.select(

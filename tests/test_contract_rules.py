@@ -171,7 +171,6 @@ def test_schema_rules():
     meta_cols = ["a", "B", "missing"]
     assert C.columns_not_in_metadata(data_cols, meta_cols) == ["EXTRA"]
     assert C.columns_not_in_data(data_cols, meta_cols) == ["MISSING"]
-    assert C.columns_in_both(data_cols, meta_cols) == ["A", "B"]
 
 
 def test_normalize_column_names(spark):

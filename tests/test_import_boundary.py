@@ -10,12 +10,16 @@ from the package outside ``ops/``, from ``__spark_entry__.py`` or from
 does not exist, or of a name that module does not define, anywhere in
 the package, ``__spark_entry__.py``, ``perfbench/`` or ``tests/``:
 imports inside functions run only when a call reaches them, so a
-deleted module would otherwise show only then.
+deleted module would otherwise show only then.  Last, it fails on any
+top-level function or class of the package whose name appears on no
+other line of those files, so a deletion cannot leave an orphan behind.
 """
 
 from __future__ import annotations
 
 import ast
+import re
+from collections import defaultdict
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
@@ -101,6 +105,12 @@ def _sources() -> list[Path]:
     return pkg + [ROOT / "__spark_entry__.py"] + sorted((ROOT / "perfbench").glob("*.py"))
 
 
+def _all_sources() -> list[Path]:
+    """The package, ``__spark_entry__.py``, ``perfbench/`` and ``tests/``."""
+    return (sorted((ROOT / PKG).rglob("*.py")) + [ROOT / "__spark_entry__.py"]
+            + sorted((ROOT / "perfbench").glob("*.py")) + sorted((ROOT / "tests").glob("*.py")))
+
+
 def test_detector_resolves_every_import_form():
     flagged = [
         ("from ..ops import dedup", f"{PKG}.plans.report"),
@@ -150,8 +160,7 @@ def test_dangling_import_detector():
 
 
 def test_every_package_import_resolves():
-    sources = (sorted((ROOT / PKG).rglob("*.py")) + [ROOT / "__spark_entry__.py"]
-               + sorted((ROOT / "perfbench").glob("*.py")) + sorted((ROOT / "tests").glob("*.py")))
+    sources = _all_sources()
     assert (ROOT / "tests" / "test_pipeline.py") in sources
     offenders = {
         str(p.relative_to(ROOT)): bad
@@ -160,3 +169,39 @@ def test_every_package_import_resolves():
                                     ".".join(p.relative_to(ROOT).with_suffix("").parts)))
     }
     assert offenders == {}
+
+
+def unreferenced_defs(texts: dict[str, str], defining: list[str]) -> list[str]:
+    """The top-level functions and classes of the files ``defining``
+    (keys of ``texts``) whose name appears on no line of ``texts`` but
+    the one that defines it, as ``file:name``."""
+    lines_of = defaultdict(set)
+    for path, text in texts.items():
+        for n, line in enumerate(text.splitlines(), 1):
+            for word in re.findall(r"\w+", line):
+                lines_of[word].add((path, n))
+    return [
+        f"{path}:{node.name}"
+        for path in defining
+        for node in ast.parse(texts[path]).body
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+        and not lines_of[node.name] - {(path, node.lineno)}
+    ]
+
+
+def test_unreferenced_def_detector():
+    texts = {
+        "a.py": "def used():\n    pass\n\n\n@decorated\ndef orphan():\n    orphan_x = 1\n",
+        "b.py": "from a import used\nclass Lone:\n    def used(self):\n        pass\n",
+        "t.py": "# orphanage, not orphan_x\n",
+    }
+    assert unreferenced_defs(texts, ["a.py", "b.py"]) == ["a.py:orphan", "b.py:Lone"]
+    texts["t.py"] += "Lone()\n"
+    assert unreferenced_defs(texts, ["a.py", "b.py"]) == ["a.py:orphan"]
+
+
+def test_every_package_def_is_referenced():
+    texts = {str(p.relative_to(ROOT)): p.read_text(encoding="utf-8") for p in _all_sources()}
+    pkg = [path for path in texts if path.startswith(PKG + "/")]
+    assert len(pkg) > 20
+    assert unreferenced_defs(texts, pkg) == []

@@ -3,7 +3,8 @@ ops/textstats must agree with the list semantics (split → filter empty)
 that the DuckDB oracle uses, for ARBITRARY ASCII text — including the
 edge case that motivated them: text edged with tabs/newlines, where
 ``normalize_text``'s space-only trim leaves ' a b ' and naive
-spaces+1 arithmetic over-counts.
+spaces+1 arithmetic over-counts. ops/dedup's duplicated-span merging
+is checked against a sliding-window reference over the same word split.
 
 Each hypothesis example is ONE batched Spark job over the whole list of
 generated strings (never a job per string).
@@ -12,6 +13,7 @@ generated strings (never a job per string).
 from __future__ import annotations
 
 import re
+from collections import Counter
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -79,3 +81,51 @@ def test_word_kernels_match_list_semantics(spark, texts):
         assert r.sh == sum(1 for w in ws if w in TS.STOPWORDS["en"]), (t, r.sh)
         assert r.lg == _lang_guess_py(t), (t, r.lg)
         assert r.tok == len(token_re.findall(t)), (t, r.tok)
+
+
+@settings(max_examples=4, deadline=None)
+@given(
+    st.lists(
+        st.lists(st.sampled_from("ab c"), min_size=0, max_size=30).map("".join),
+        min_size=1,
+        max_size=12,
+    )
+)
+def test_duplicated_spans_property(spark, texts):
+    """Gaps-and-islands span merging under a tiny alphabet (duplicates
+    are dense, so island boundaries — adjacent, overlapping, exactly
+    k-apart — are all exercised) must match the pure-Python
+    sliding-window reference."""
+    from dp_data_quality_spark.ops import dedup as D
+
+    K = 3
+    rows = list(enumerate(texts))
+    gram_count = Counter()
+    words_by_doc = {}
+    for did, t in rows:
+        ws = _words_py(t)
+        words_by_doc[did] = ws
+        for p in range(len(ws) - K + 1):
+            gram_count[tuple(ws[p : p + K])] += 1
+    ref = set()
+    for did, _ in rows:
+        ws = words_by_doc[did]
+        hits = [
+            p
+            for p in range(len(ws) - K + 1)
+            if gram_count[tuple(ws[p : p + K])] >= 2
+        ]
+        spans = []
+        for p in hits:
+            if spans and p - spans[-1][1] <= K:
+                spans[-1][1] = p
+            else:
+                spans.append([p, p])
+        ref |= {(did, s, e - s + K) for s, e in spans}
+
+    df = spark.createDataFrame(rows, "doc_id int, text string")
+    got = {
+        (r["doc_id"], r["span_start"], r["span_len"])
+        for r in D.duplicated_spans(df, k=K).collect()
+    }
+    assert got == ref

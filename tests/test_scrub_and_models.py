@@ -1,19 +1,24 @@
 """Unit tests for the scrub chain (byte-exact golden strings), the langid
-scorer and the perplexity scorer."""
+scorer, the perplexity scorer and its distributed table training."""
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
 from dp_data_quality_spark.config import FilterConfig
+from dp_data_quality_spark.functions import ngram
 from dp_data_quality_spark.functions.langid import _TABLE as LT
 from dp_data_quality_spark.functions.langid import score_batch
 from dp_data_quality_spark.functions.perplexity import (
+    NGRAM,
     PPL_UNSCORABLE,
     _TABLE as PT,
     make_scorer_udf,
     ppl_batch,
+    table_from_counts,
+    train_table_distributed,
 )
 from dp_data_quality_spark.functions.scrub import scrub_text
 
@@ -88,3 +93,45 @@ def test_udfs_run_in_spark(spark):
     assert rows[0].n_words == 9
     assert rows[1].lang == "und" and rows[1].ppl == PPL_UNSCORABLE
     assert rows[1].n_words == 0
+
+
+def test_train_table_distributed_matches_local(spark):
+    """Distributed training is bit-identical to single-process numpy
+    counting over the same rows, regardless of partitioning."""
+    texts = [
+        "the quick brown fox jumps over the lazy dog",
+        "pack my box with five dozen liquor jugs",
+        None,
+        "",
+        "short",
+        "sphinx of black quartz judge my vow " * 3,
+    ]
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+
+    buf, _off, _len = ngram.encode_batch(texts)
+    local_counts = ngram.bucket_counts(buf, NGRAM)
+    expected = table_from_counts(local_counts)
+
+    for parts in (1, 5):
+        got = train_table_distributed(df.repartition(parts))
+        assert got.dtype == np.float32
+        assert np.array_equal(got, expected)
+
+
+def test_trained_table_drives_scorer(spark):
+    """score_turns accepts a corpus-trained ppl table: in-domain text
+    scores lower perplexity under a model trained on it than under the
+    hermetic import-time model trained on unrelated vocabulary."""
+    from dp_data_quality_spark.pipeline import score_turns
+
+    corpus = ["alpha beta gamma delta epsilon zeta " * 4] * 8
+    cdf = spark.createDataFrame([(t,) for t in corpus], "text string")
+    table = train_table_distributed(cdf)
+
+    turns = spark.createDataFrame(
+        [("c1", 0, "user", "alpha beta gamma delta epsilon zeta", None, None)],
+        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
+    )
+    ppl_trained = score_turns(turns, spark, ppl_table=table).collect()[0]["ppl"]
+    ppl_default = score_turns(turns, spark).collect()[0]["ppl"]
+    assert ppl_trained < ppl_default
