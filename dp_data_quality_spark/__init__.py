@@ -22,8 +22,15 @@ Public modules
 - ``sources``            — format-sniffed readers + recursive JSON flatten
 - ``synth``              — deterministic distributed transcript synthesis
 
-``ops`` holds the earlier operator library (dedup, ANN, LM training,
-media decode, profiling, sampling); none of the paths above imports it.
+- ``worker_daemon``      — the Python daemon of a local ``get_spark``
+  session: Spark's, on a worker path without redundant archives
+
+``ops`` holds the earlier operator library (dedup, duplicate-graph
+resolution, incremental dedup, hashing, text statistics, conversation
+checks, sequence packing, profiling, sampling, as-of join); none of the
+paths above imports it.  This module imports nothing, so ``python -m
+dp_data_quality_spark.worker_daemon`` loads no pyspark module before
+the daemon has filtered the path.
 """
 
 __version__ = "0.1.0"

@@ -78,37 +78,49 @@ OUTPUT_COLUMNS = [
 SCORED_READ_SCHEMA = "keep INT, bucket INT, drop_reasons ARRAY<STRING>"
 
 
+# Columns score_turns adds.  The derived columns are planned with
+# lateral column aliases, which an input column of the same name would
+# silently take the place of.
+SCORE_COLUMNS = (
+    "__score", "lang", "lang_conf", "ppl", "n_words", "repetition_ratio",
+    "n_chars", "symbol_ratio", "boilerplate", "drop_reasons", "keep", "scrubbed_text",
+)
+
+
 def score_turns(
     df: DataFrame,
     spark: SparkSession,
     cfg: FilterConfig | None = None,
     text_col: str = "text",
     ppl_table=None,
+    n_buckets: int | None = None,
 ) -> DataFrame:
     """Add lang, lang_conf, ppl, heuristic columns, drop_reasons, keep and
     scrubbed_text in a single pass.  ``ppl_table`` swaps the hermetic
     import-time perplexity model for a corpus-trained one (numpy array
-    from ``functions.perplexity.train_table_distributed``).
+    from ``functions.perplexity.train_table_distributed``).  ``n_buckets``
+    also adds ``bucket`` (see ``with_bucket``) in the same projection.
 
-    Every column after the scorer UDF is planned from SQL text rendered
-    from ``cfg``: a few ``selectExpr`` calls instead of a py4j call per
-    Column node, which made driver planning a fixed cost of each
-    micro-batch."""
+    The projection is planned in two DataFrame steps: a ``select`` adding
+    the scorer UDF's struct (and ``bucket``), then one ``selectExpr``,
+    rendered as SQL text from ``cfg``, in which each derived column
+    reads the ones before it through lateral column aliases.  Each
+    DataFrame step is a fixed driver cost of a stream micro-batch.
+    Raises ``ValueError`` if ``df`` already has a column of
+    ``SCORE_COLUMNS``: a lateral alias would read the input column."""
     cfg = cfg or FilterConfig()
+    names = df.columns
+    clash = [c for c in names if c.lower() in SCORE_COLUMNS]
+    if clash:
+        raise ValueError(f"the input already has scored column(s) {clash}: drop or rename them")
     scorer = make_scorer_udf(spark, ppl_table=ppl_table)
     t = ident(text_col)
-    columns = [ident(c) for c in df.columns]
-
-    # UDF first, heuristics second: every non-UDF column is buffered
-    # JVM-side while batches round-trip through Python, so the Arrow
-    # stage should see the narrowest possible row (original columns
-    # only, none of the derived heuristic columns).
-    df = df.withColumn("__score", scorer(F.expr(H.scored_prefix(t, cfg)))).selectExpr(
-        *columns,
-        *(f"__score.{f} AS {f}"
-          for f in ("lang", "lang_conf", "ppl", "n_words", "repetition_ratio")),
-        *H.heuristic_columns(t, cfg),
-    )
+    added = []
+    if n_buckets is not None:
+        if "bucket" in (c.lower() for c in names):
+            df = with_bucket(df, n_buckets)  # replaced in place, as withColumn does
+        else:
+            added, names = [F.expr(f"{bucket_sql(n_buckets)} AS bucket")], names + ["bucket"]
 
     lang_ok = (
         f"lang IN ({', '.join(string(x) for x in cfg.expected_langs)})"
@@ -124,10 +136,19 @@ def score_turns(
         for reason, fail in fails
     ]
     scrubbed = scrub_sql(t, cfg.toxicity_lexicon, pii=cfg.scrub_pii)
-    return (
-        df.selectExpr("*", f"array_compact(array({', '.join(reasons)})) AS drop_reasons")
-        .selectExpr("*", "size(drop_reasons) = 0 AS keep")
-        .selectExpr("*", f"CASE WHEN keep THEN {scrubbed} END AS scrubbed_text")
+    # UDF first, heuristics second: every non-UDF column is buffered
+    # JVM-side while batches round-trip through Python, so the Arrow
+    # stage should see the narrowest possible row (original columns
+    # only, none of the derived heuristic columns).
+    df = df.select("*", *added, scorer(F.expr(H.scored_prefix(t, cfg))).alias("__score"))
+    return df.selectExpr(
+        *(ident(c) for c in names),
+        *(f"__score.{f} AS {f}"
+          for f in ("lang", "lang_conf", "ppl", "n_words", "repetition_ratio")),
+        *H.heuristic_columns(t, cfg),
+        f"array_compact(array({', '.join(reasons)})) AS drop_reasons",
+        "size(drop_reasons) = 0 AS keep",
+        f"CASE WHEN keep THEN {scrubbed} END AS scrubbed_text",
     )
 
 
@@ -160,10 +181,14 @@ def write_scored(scored: DataFrame, path: str, run_id: str | None = None) -> Non
     )
 
 
+def bucket_sql(n_buckets: int) -> str:
+    """A conversation's bucket as SQL: ``pmod(xxhash64(conv_id), n_buckets)``
+    as an int (one parse on the driver, not a py4j call per node)."""
+    return f"CAST(pmod(xxhash64(conv_id), {number(n_buckets)}) AS INT)"
+
+
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
-    return df.withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets)).cast("int")
-    )
+    return df.withColumn("bucket", F.expr(bucket_sql(n_buckets)))
 
 
 def snapshot_fingerprint(df: DataFrame, explicit: str | None = None) -> str:

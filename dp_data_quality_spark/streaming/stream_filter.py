@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import FilterConfig
-from ..pipeline import score_turns, with_bucket, write_scored
+from ..pipeline import score_turns, write_scored
 from ..session import glob
 
 
@@ -45,8 +45,7 @@ def score_stream(
 
     Stateless (projection only) — works on any source delivering the
     transcript schema (conv_id, turn_idx, role, text, tool, ts)."""
-    cfg = cfg or FilterConfig()
-    return score_turns(with_bucket(stream_df, n_buckets), spark, cfg)
+    return score_turns(stream_df, spark, cfg, n_buckets=n_buckets)
 
 
 def filtered_writer(output_dir: str):

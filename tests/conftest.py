@@ -10,6 +10,8 @@ from pathlib import Path
 import pytest
 from pyspark.sql import SparkSession
 
+from dp_data_quality_spark.session import WORKER_DAEMON_MODULE
+
 
 @pytest.fixture(scope="session")
 def spark() -> SparkSession:
@@ -22,6 +24,8 @@ def spark() -> SparkSession:
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.ansi.enabled", "false")  # contract parity (non-ANSI casts)
         .config("spark.ui.enabled", "false")
+        # the Python workers get_spark gives a local session
+        .config("spark.python.daemon.module", WORKER_DAEMON_MODULE)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

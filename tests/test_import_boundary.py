@@ -13,6 +13,9 @@ imports inside functions run only when a call reaches them, so a
 deleted module would otherwise show only then.  Last, it fails on any
 top-level function or class of the package whose name appears on no
 other line of those files, so a deletion cannot leave an orphan behind.
+And ``worker_daemon`` imports pyspark only after it has filtered the
+worker path, in a package whose ``__init__`` imports nothing: ``python
+-m`` would otherwise load pyspark from the archive it means to drop.
 """
 
 from __future__ import annotations
@@ -205,3 +208,46 @@ def test_every_package_def_is_referenced():
     pkg = [path for path in texts if path.startswith(PKG + "/")]
     assert len(pkg) > 20
     assert unreferenced_defs(texts, pkg) == []
+
+
+def early_pyspark_imports(source: str, filter_call: str) -> list[int]:
+    """The lines of ``source`` importing pyspark before a call to
+    ``filter_call`` has run: at module level, or in a function before
+    its first call to ``filter_call`` (or with none)."""
+    def is_pyspark(node):
+        mods = ([a.name for a in node.names] if isinstance(node, ast.Import)
+                else [node.module or ""] if isinstance(node, ast.ImportFrom) else [])
+        return any(m == "pyspark" or m.startswith("pyspark.") for m in mods)
+
+    tree = ast.parse(source)
+    early = []
+    for stmt in tree.body:
+        if not isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            early += [n.lineno for n in ast.walk(stmt) if is_pyspark(n)]
+            continue
+        calls = [n.lineno for n in ast.walk(stmt) if isinstance(n, ast.Call)
+                 and isinstance(n.func, ast.Name) and n.func.id == filter_call]
+        early += [n.lineno for n in ast.walk(stmt)
+                  if is_pyspark(n) and (not calls or n.lineno <= min(calls))]
+    return sorted(early)
+
+
+def test_early_pyspark_import_detector():
+    flagged = [
+        "import pyspark.daemon\ndef main():\n    drop(1)\n",
+        "def main():\n    from pyspark import daemon\n    drop(1)\n",
+        "def main():\n    import pyspark\n",
+        "if True:\n    import pyspark\n",
+    ]
+    for source in flagged:
+        assert early_pyspark_imports(source, "drop"), source
+    ok = "import os\ndef main():\n    drop(1)\n    import pyspark.daemon\n"
+    assert early_pyspark_imports(ok, "drop") == []
+
+
+def test_worker_daemon_filters_the_path_before_importing_pyspark():
+    init = ast.parse((ROOT / PKG / "__init__.py").read_text(encoding="utf-8"))
+    assert [n for n in ast.walk(init) if isinstance(n, (ast.Import, ast.ImportFrom))] == []
+    daemon = (ROOT / PKG / "worker_daemon.py").read_text(encoding="utf-8")
+    assert "pyspark.daemon" in daemon
+    assert early_pyspark_imports(daemon, "droppable_archives") == []

@@ -139,6 +139,23 @@ def test_score_turns_matches_oracle_under_config(spark, cfg, present, absent):
     assert any("boilerplate" in r.drop_reasons for r in rows)
 
 
+def test_score_turns_rejects_an_input_with_a_scored_column(spark):
+    # the derived columns read each other through lateral column
+    # aliases, which a same-named input column would silently replace
+    base = spark.createDataFrame(pd.DataFrame({"conv_id": ["c1"], "text": ["hello there"]}))
+    for name in ("lang", "KEEP", "drop_reasons", "scrubbed_text", "__score"):
+        with pytest.raises(ValueError, match=name):
+            score_turns(base.withColumn(name, F.lit(1)), spark, CFG)
+
+
+def test_score_stream_replaces_an_input_bucket_in_place(spark):
+    base = spark.createDataFrame(pd.DataFrame({"conv_id": ["c1", "c2"], "text": ["a b", "c d"]}))
+    scored = score_stream(base.withColumn("bucket", F.lit(-1)), spark, CFG, n_buckets=4)
+    assert scored.columns[:3] == ["conv_id", "text", "bucket"]
+    expected = {r.conv_id: r.bucket for r in with_bucket(base, 4).collect()}
+    assert {r.conv_id: r.bucket for r in scored.collect()} == expected
+
+
 def test_pipeline_writes_and_lineage(spark, transcripts, tmp_path):
     res = run_pipeline(spark, transcripts, str(tmp_path / "out"),
                        cfg=CFG, n_buckets=8, run_id="r1")
